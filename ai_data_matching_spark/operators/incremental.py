@@ -52,8 +52,8 @@ committed state.
 
 from __future__ import annotations
 
-import os
 from dataclasses import asdict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -252,15 +252,19 @@ def incremental_label_delta(
     cannot broadcast, so Spark sort-merge-shuffled the whole history's
     labels per fold, twice (src + dst), and the fresh-node anti-join
     shuffled it a third time. Now the prior side is first cut to the
-    edge-endpoint url set with one broadcast semi-join (scan-only,
-    O(delta) output, persisted once for both sides), the endpoint joins
-    broadcast that slim cut, and fresh nodes come from the join's own
-    null-ness flags (a url absent from the prior keeps itself — so
-    whether a contracted NODE is a prior component rep or a brand-new
-    url is already decided during contraction, no history anti-join
-    needed). The one remaining O(history) touch is the changed-row scan
-    against the (broadcast) contracted result — irreducible, it defines
-    the delta.
+    edge-endpoint url set with one semi-join (O(delta) output, persisted
+    once for both sides), the endpoint joins read that slim cut, and
+    fresh nodes come from the join's own null-ness flags (a url absent
+    from the prior keeps itself — so whether a contracted NODE is a
+    prior component rep or a brand-new url is already decided during
+    contraction, no history anti-join needed). The one remaining
+    O(history) touch is the changed-row scan against the contracted
+    result — irreducible, it defines the delta. The joins carry no
+    broadcast hint: this path runs when the delta is past the
+    small-graph gate (or of unknown size), where a forced broadcast
+    would bypass autoBroadcastJoinThreshold and pull a large side onto
+    the driver; Spark still broadcasts whichever side its (AQE runtime)
+    size estimate says is small.
 
     When the caller knows the edge-delta row count (``n_new_edges`` —
     the fold reads it from the committed snapshot's manifest record, so
@@ -282,17 +286,15 @@ def incremental_label_delta(
         .unionByName(e.select(F.col("dst").alias("url")))
         .dropDuplicates()
     )
-    # persisted: pl_src and pl_dst below both broadcast this cut — without
-    # the persist each broadcast exchange re-scans the full prior labels
-    touched = persist_tracked(
-        prior_labels.join(F.broadcast(ends), "url", "left_semi")
-    )
+    # persisted: pl_src and pl_dst below both join this cut — without the
+    # persist each join side re-scans the full prior labels
+    touched = persist_tracked(prior_labels.join(ends, "url", "left_semi"))
     pl_src = touched.select(F.col("url").alias("src"), F.col("component").alias("_c_src"))
     pl_dst = touched.select(F.col("url").alias("dst"), F.col("component").alias("_c_dst"))
     # persisted: feeds BOTH the CC edge list and the node-origin flags
     contracted_tagged = persist_tracked(
-        e.join(F.broadcast(pl_src), "src", "left")
-        .join(F.broadcast(pl_dst), "dst", "left")
+        e.join(pl_src, "src", "left")
+        .join(pl_dst, "dst", "left")
         .select(
             F.coalesce("_c_src", "src").alias("src"),
             F.col("_c_src").isNotNull().alias("_src_prior"),
@@ -316,11 +318,7 @@ def incremental_label_delta(
     c_labels = persist_tracked(c_labels)
     changed = (
         prior_labels.join(
-            F.broadcast(
-                c_labels.select(
-                    F.col("url").alias("_rep"), F.col("component").alias("_nc")
-                )
-            ),
+            c_labels.select(F.col("url").alias("_rep"), F.col("component").alias("_nc")),
             prior_labels["component"] == F.col("_rep"),
         )
         # a touched component whose rep stays its own min is unchanged —
@@ -329,7 +327,7 @@ def incremental_label_delta(
         .select("url", F.col("_nc").alias("component"))
     )
     fresh = c_labels.join(
-        F.broadcast(node_flags.filter(~F.col("_prior")).select("url")),
+        node_flags.filter(~F.col("_prior")).select("url"),
         "url",
         "left_semi",
     )
@@ -464,7 +462,18 @@ def incremental_candidate_pairs(
     return pairs, hot
 
 
-def run_incremental(
+class FoldCommit(NamedTuple):
+    """What a commit-only fold leaves behind: the fingerprint its state is
+    committed under (the next fold's ``prior_fingerprint``), the logical
+    stages resumed from an earlier attempt, and the contracted CC's
+    iteration count (0 on the driver path or a resumed label stage)."""
+
+    fingerprint: str
+    resumed_stages: list[str]
+    cc_iterations: int
+
+
+def fold_incremental(
     spark: SparkSession,
     new_pages: DataFrame,
     io: TableIO,
@@ -472,9 +481,10 @@ def run_incremental(
     cfg: PipelineConfig | None = None,
     prior_fingerprint: str | None = None,
     compact_every: int = 8,
-) -> PipelineResult:
+) -> FoldCommit:
     """Resolve ``new_pages`` (url, warc_ts, html[, text, lang]) against the
-    prior committed run and commit the state DELTA.
+    prior committed run and commit the state DELTA — commits only: no
+    full-state view is built (``run_incremental`` adds those).
 
     ``prior_fingerprint`` identifies the state to chain on: the base
     pipeline's config fingerprint for the first batch, or a previous
@@ -537,15 +547,12 @@ def run_incremental(
             resumed.append(name)
         return df
 
-    def maybe_compact(name: str, view: DataFrame) -> DataFrame:
-        """On a compaction batch, materialize the full state view as its
-        own snapshot (idempotent on retry)."""
-        if not compact:
-            return view
-        full_rec = io.last_committed(name, fp)
-        if full_rec is not None:
-            return io.read_snapshot(spark, full_rec)
-        return io.commit(view, name, fp, extra=full_extra)
+    def maybe_compact(name: str) -> None:
+        """On a compaction batch, materialize the merge-on-read state view
+        at ``fp`` as its own full snapshot (idempotent on retry). Eager,
+        so a caller that never reads the views still bounds the chain."""
+        if compact and io.last_committed(name, fp) is None:
+            io.commit(io.read_state(spark, name, fp), name, fp, extra=full_extra)
 
     # batch sketching: same fused kernel + key derivation as the pipeline.
     # Incoming rows are classified against the committed state by CONTENT,
@@ -843,26 +850,6 @@ def run_incremental(
         fuzzy_inc = fuzzy_match_edges(
             scored, threshold=cfg.fuzzy_threshold, best_match_only=cfg.best_match_only
         )
-        if os.environ.get("SPARK_GRAFT_PROFILE_FOLD") == "1":
-            # diagnostic only (scripts/profile_incremental.py): forces
-            # extra actions to attribute the edge-stage seconds — never
-            # on in a measured bench run
-            import sys as _sys
-            import time as _time
-
-            for _lbl, _frame in (
-                ("blocked_view_scan", blocked),
-                ("exact_touched", exact_inc),
-                ("candidate_pairs", pairs),
-                ("scored_pairs", scored),
-            ):
-                _t0 = _time.perf_counter()
-                _n = _frame.count()
-                print(
-                    f"    [fold-profile] {_lbl}: {_n} rows "
-                    f"{_time.perf_counter() - _t0:.2f}s",
-                    file=_sys.stderr,
-                )
         return union_edges(exact_inc, fuzzy_inc)
 
     # the fold COMMITS only the edge delta — prior edges are never
@@ -875,12 +862,7 @@ def run_incremental(
     # consume it directly instead of re-resolving the manifest record
     # and rebuilding the same scan plan twice per fold.
     edge_delta = stage_delta("edges", _edges_delta)
-    # consumed ≥2× below (clusters + stats) and by the caller — persist
-    # the slim reconstructed view so the chain union + dedup shuffle runs
-    # once (columns: 2 urls + score + type; MEMORY_AND_DISK spills)
-    edges = maybe_compact("edges", io.read_state(spark, "edges", fp))
-    if not compact:
-        edges = persist_tracked(edges)
+    maybe_compact("edges")
 
     cc_iters = 0
 
@@ -903,16 +885,7 @@ def run_incremental(
         return d
 
     stage_delta("labels", _labels_delta)
-    labels = maybe_compact("labels", io.read_state(spark, "labels", fp))
-
-    # the assigned view reconstructs blocked state on read as well —
-    # full snapshot when compacted, prior ∖ changed ∪ delta otherwise
-    pages_slim = io.read_state(spark, "blocked", fp).select(
-        "url", "warc_ts", "lang", "norm_domain"
-    )
-    assigned = cluster_assignments(pages_slim, labels)
-    clusters = consolidate_clusters(assigned, edges)
-    stats = match_statistics(assigned, edges)
+    maybe_compact("labels")
 
     # Per-batch observability is DELTA-scoped. The previous form wrote
     # the full-state match_statistics row per fold — an O(history)
@@ -925,11 +898,18 @@ def run_incremental(
     # anyway. Edge counts + histogram join the fused write below.
     from .scoring import score_histogram
 
+    # one global aggregate (a row even over an empty delta), unpivoted:
+    # both match types always get a row, 0 when the fold emitted none
     _metric_part(
         "edge_counts",
         F.col("match_type"),
         F.col("n"),
-        edge_delta.groupBy("match_type").agg(F.count("*").alias("n")),
+        edge_delta.agg(
+            *(
+                F.count(F.when(F.col("match_type") == m, 1)).alias(m)
+                for m in ("exact", "fuzzy")
+            )
+        ).unpivot([], ["exact", "fuzzy"], "match_type", "n"),
     )
     _metric_part(
         "score_histogram",
@@ -955,12 +935,41 @@ def run_incremental(
             f"batch_metrics_{batch_id}",
         )
 
+    return FoldCommit(fp, resumed, cc_iters)
+
+
+def run_incremental(
+    spark: SparkSession,
+    new_pages: DataFrame,
+    io: TableIO,
+    batch_id: str,
+    cfg: PipelineConfig | None = None,
+    prior_fingerprint: str | None = None,
+    compact_every: int = 8,
+) -> PipelineResult:
+    """``fold_incremental``, then the full-state views of the folded state
+    (assigned / clusters / edges / stats) as lazy merge-on-read frames —
+    the same ``PipelineResult`` shape ``run_pipeline`` returns."""
+    fold = fold_incremental(
+        spark, new_pages, io, batch_id, cfg, prior_fingerprint, compact_every
+    )
+    fp = fold.fingerprint
+    # consumed twice (clusters + stats) and by the caller — persist the
+    # slim reconstructed view so the chain union + dedup shuffle runs
+    # once (2 urls + score + type; MEMORY_AND_DISK spills)
+    edges = persist_tracked(io.read_state(spark, "edges", fp))
+    # the assigned view reconstructs blocked state on read as well —
+    # full snapshot when compacted, prior ∖ changed ∪ delta otherwise
+    pages_slim = io.read_state(spark, "blocked", fp).select(
+        "url", "warc_ts", "lang", "norm_domain"
+    )
+    assigned = cluster_assignments(pages_slim, io.read_state(spark, "labels", fp))
     return PipelineResult(
         assigned=assigned,
-        clusters=clusters,
+        clusters=consolidate_clusters(assigned, edges),
         edges=edges,
-        stats=stats,
-        resumed_stages=resumed,
-        cc_iterations=cc_iters,
+        stats=match_statistics(assigned, edges),
+        resumed_stages=fold.resumed_stages,
+        cc_iterations=fold.cc_iterations,
         fingerprint=fp,
     )

@@ -20,6 +20,15 @@ seam:
   which this sandbox lacks, so its write path is exercised only by the
   skip-marked integration test while the ident/DDL wiring is unit-tested.
 
+Each manifest record also carries ``schema`` — the committed frame's
+Spark schema as ``df.schema.json()``. The parquet backend reads a
+snapshot with that schema given (``spark.read.schema(...)``), so a read
+is a plan and launches no Spark job; inferring it from the data files
+costs one job per read, and a merge-on-read chain walk reads every hop.
+This is the Iceberg contract, where the schema lives in table metadata,
+never in the data files. A record committed before the field existed
+has no ``schema`` and falls back to the inferring read.
+
 Either way, a snapshot is visible only once its manifest entry lands
 (write-temp + os.replace = atomic on POSIX — same publish-on-commit
 semantics as an Iceberg snapshot commit). Resume = read manifest, match
@@ -42,6 +51,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def config_fingerprint(payload: dict) -> str:
@@ -159,7 +169,10 @@ class ParquetSnapshotBackend:
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
     def read_snapshot(self, spark: SparkSession, rec: dict) -> DataFrame:
-        return spark.read.parquet(rec["path"])
+        reader = spark.read
+        if "schema" in rec:
+            reader = reader.schema(StructType.fromJson(json.loads(rec["schema"])))
+        return reader.parquet(rec["path"])
 
     def drop_snapshot(self, rec: dict, spark: SparkSession | None = None) -> None:
         import shutil
@@ -316,7 +329,10 @@ class TableIO:
         into the manifest record (e.g. ``cfg_fp``, the config fingerprint a
         restarted stream validates before chaining onto this state)."""
         snapshot_id = uuid.uuid4().hex[:12]
-        locator = self.backend.write_snapshot(df, stage, snapshot_id)
+        locator = {
+            **self.backend.write_snapshot(df, stage, snapshot_id),
+            "schema": df.schema.json(),
+        }
 
         spark = df.sparkSession
         committed = self.backend.read_snapshot(spark, locator)

@@ -2,7 +2,7 @@
 
 Ties the streaming front half to the batch-incremental back half: each
 micro-batch of new pages is folded into the committed entity state via
-``operators.incremental.run_incremental`` inside ``foreachBatch`` — the
+``operators.incremental.fold_incremental`` inside ``foreachBatch`` — the
 standard Structured Streaming shape for sinks that need full batch
 semantics (multi-stage joins + CC are not expressible as a streaming
 plan; per-batch they are exactly the incremental ER job).
@@ -23,6 +23,9 @@ Consistency story, end to end:
 
 The first epoch bootstraps: with no committed state yet it runs the full
 pipeline (committed under the config fingerprint), and later epochs fold.
+A fold only commits: nothing in the stream reads the full-state views
+(``run_incremental``'s assigned / clusters / stats), so none is built;
+readers reconstruct them from the snapshots (``TableIO.read_state``).
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from dataclasses import asdict
 from pyspark.sql import SparkSession
 
 from ..cache import release_persisted
-from ..operators.incremental import run_incremental
+from ..operators.incremental import fold_incremental
 from ..pipeline import PipelineConfig, run_pipeline
 from ..sources.tables import TableIO, config_fingerprint
 from .ingest import read_page_stream
@@ -104,7 +107,7 @@ def resolve_stream(
             if prior is None:
                 run_pipeline(spark, batch_df, io=io, cfg=cfg)
             else:
-                run_incremental(
+                fold_incremental(
                     spark,
                     batch_df,
                     io,
@@ -121,10 +124,9 @@ def resolve_stream(
                 )
         finally:
             # the fold's outputs live in committed snapshots by now; the
-            # ~6 persist_tracked frames each run_incremental registers
-            # (touched keys, exact edges, label deltas, the reconstructed
-            # edge view) would otherwise accumulate one fold's worth of
-            # MEMORY_AND_DISK blocks per epoch, unbounded over a
+            # persist_tracked frames each fold registers (touched keys,
+            # exact edges, hot keys) would otherwise accumulate one fold's
+            # worth of MEMORY_AND_DISK blocks per epoch, unbounded over a
             # long-running stream. Released handles stay usable — a later
             # consumer just recomputes from lineage.
             release_persisted()

@@ -182,10 +182,9 @@ def _incremental_section(
     convention as the pipeline headline — because a single anchor+fold
     pair is a 15-40 s window on a shared host where the r03/r04 artifacts
     measured the ratio swinging 0.3-1.6× on window noise alone (a
-    controlled same-window profile reads ~1.5×:
-    scripts/profile_incremental.py). Anchor and fold of one rep stay
-    adjacent, so each rep's ratio is same-window; the reported speedup is
-    the best rep's ratio. Disable with BENCH_INCREMENTAL=0.
+    controlled same-window profile read ~1.5×). Anchor and fold of one
+    rep stay adjacent, so each rep's ratio is same-window; the reported
+    speedup is the best rep's ratio. Disable with BENCH_INCREMENTAL=0.
     """
     if os.environ.get("BENCH_INCREMENTAL", "1") == "0":
         return

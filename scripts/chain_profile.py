@@ -12,7 +12,8 @@ if it is right, the series is flat with a bump on compaction folds
 This script measures exactly that: a base run, then K same-sized folds
 chained on one snapshot root, printing per-fold seconds + the chain
 length each fold read. Diagnostic only — never part of the recorded
-bench artifact (same convention as profile_incremental.py).
+bench artifact; per-phase fold spans come from
+``perfbench/run.py --workload stream --trace 1``.
 
 Usage: python scripts/chain_profile.py [n_pages] [n_folds] [cpus]
 """
@@ -47,7 +48,7 @@ def main() -> None:
     root = tempfile.mkdtemp(prefix="chain-", dir=shm if os.path.isdir(shm) else None)
     io = TableIO(root)
     # tmpfs is host RAM — always reclaim both roots and stop the session,
-    # even on a mid-run crash (profile_incremental.py convention)
+    # even on a mid-run crash
     warm_root = tempfile.mkdtemp(prefix="chain-warm-", dir=os.path.dirname(root))
     try:
         _profile(spark, io, root, warm_root)

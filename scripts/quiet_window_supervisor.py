@@ -57,7 +57,7 @@ def foreground_busy() -> bool:
     the capture launched straight into it): known heavy job names, OR the
     1-min load average above a threshold a quiet box never reaches."""
     out = subprocess.run(
-        ["pgrep", "-f", "pytest|bench\\.py|check_oracle|profile_incremental"],
+        ["pgrep", "-f", "pytest|bench\\.py|check_oracle"],
         capture_output=True,
         text=True,
         check=False,

@@ -4,6 +4,7 @@ the Iceberg adapter's ident/DDL plumbing is correct without needing the
 runtime jar, and age-based metric retention prunes without breaking
 resume."""
 
+import json
 import os
 import time
 
@@ -203,3 +204,72 @@ def test_merge_edge_sets_random_orientations_property(spark):
             ).collect()
         }
         assert got == expected, f"seed={seed}"
+
+
+def _depth2_chain(spark, io):
+    """Labels and edges committed as a full snapshot at fp0 plus two
+    delta hops (fp1, fp2): read_state at fp2 walks the chain."""
+    labels = [
+        [("a", "a"), ("b", "a"), ("c", "c")],
+        [("c", "a"), ("d", "d")],
+        [("e", "d")],
+    ]
+    edges = [
+        [("b", "a", 1.0, "exact")],
+        [("a", "c", 0.9, "fuzzy")],
+        [("c", "a", 1.0, "exact"), ("d", "e", 0.8, "fuzzy")],
+    ]
+    prior = None
+    for i, (lab, edg) in enumerate(zip(labels, edges)):
+        extra = None if prior is None else {"prior": prior, "kind": "delta"}
+        suffix = "" if prior is None else "_delta"
+        io.commit(
+            spark.createDataFrame(lab, "url string, component string"),
+            "labels" + suffix, f"fp{i}", extra=extra,
+        )
+        io.commit(
+            spark.createDataFrame(edg, "src string, dst string, score double, match_type string"),
+            "edges" + suffix, f"fp{i}", extra=extra,
+        )
+        prior = f"fp{i}"
+
+
+def test_read_state_chain_launches_no_spark_job(spark, tmp_path):
+    """Commit records the frame's schema, so a merge-on-read over a
+    depth-2 chain is pure planning — zero Spark jobs, counted by job
+    group — and its schema equals what inferring from the files gives."""
+    io = TableIO(str(tmp_path / "snaps"))
+    _depth2_chain(spark, io)
+    sc = spark.sparkContext
+    group = "read-state-no-jobs"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        views = {s: io.read_state(spark, s, "fp2") for s in ("labels", "edges")}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    for stage, view in views.items():
+        rec, is_delta = io.state_record(stage, "fp2")
+        assert is_delta and "schema" in rec
+        assert view.schema == spark.read.parquet(rec["path"]).schema, stage
+    assert {(r["url"], r["component"]) for r in views["labels"].collect()} == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"),
+    }
+
+
+def test_read_state_without_recorded_schema(spark, tmp_path):
+    """A manifest written before records carried ``schema`` still reads:
+    the parquet backend falls back to inferring it, with the same rows
+    and schema as the schema-given read."""
+    io = TableIO(str(tmp_path / "snaps"))
+    _depth2_chain(spark, io)
+    want = {s: io.read_state(spark, s, "fp2") for s in ("labels", "edges")}
+    records = io._read_manifest()
+    for rec in records:
+        rec.pop("schema")
+    with open(io._manifest_path, "w") as f:
+        json.dump(records, f)
+    for stage, view in want.items():
+        legacy = io.read_state(spark, stage, "fp2")
+        assert legacy.schema == view.schema, stage
+        assert sorted(legacy.collect()) == sorted(view.collect()), stage
