@@ -1,7 +1,7 @@
 """Extraction & normalization stage.
 
 Re-expresses the reference's parity-critical normalizers as Spark-native
-column expressions plus one Arrow-batched pandas UDF for HTML→text:
+column expressions plus the one Arrow-batched kernel that runs stages 1+2:
 
 * ``normalize_name_col``      — reference ``normalize_company_name``
   (/root/reference/src/matching_engine.py:21-58): lowercase/trim, ordered
@@ -11,10 +11,13 @@ column expressions plus one Arrow-batched pandas UDF for HTML→text:
   (/root/reference/src/matching_engine.py:60-79) with the hash-order
   nondeterminism FIXED: variants carry an explicit priority
   (normalized > stopword-stripped) so probe order is total.
-* ``extract_text_from_html``  — deterministic pure-Python HTML→text
-  (pinned algorithm, zero library dependence) exposed both as a scalar
-  function (for tests / synth round-trip) and as a pandas UDF over
-  ``html:binary`` (per-row invariant: byte-identical text per url).
+* ``extract_text_py``         — deterministic pure-Python HTML→text
+  (pinned algorithm, zero library dependence; per-row invariant:
+  byte-identical text per url).
+* ``make_extract_sketch_udf`` — the fused html → extract → normalize →
+  sketch kernel (one Arrow round trip), the only stage-1+2 path; its
+  scalar twins are ``extract_text_py`` → ``normalize_name_py`` →
+  ``functions.sketches.simhash_minhash_py``.
 * ``normalized_domain_col``   — url → lowercase host minus leading ``www.``
   (the graft analog of company-name normalization; blocking key #1).
 """
@@ -215,44 +218,6 @@ def extract_text_py(html: bytes | None) -> str:
     return _WS_RE.sub(" ", text).strip()
 
 
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched wrapper around :func:`extract_text_py`."""
-    return html.map(extract_text_py)
-
-
-_EXTRACT_NORM_SCHEMA = T.StructType(
-    [
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("norm_text", T.StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_EXTRACT_NORM_SCHEMA)
-def extract_norm_udf(html: pd.Series) -> pd.DataFrame:
-    """Fused HTML→text + normalization in ONE Arrow pass.
-
-    The pipeline's hot path: running the 16-pattern normalizer as a JVM
-    ``regexp_replace`` chain allocates ~16 intermediate strings per row and
-    collapses under GC contention at high thread counts (measured 37s for
-    500k rows at local[32] vs 5s here — Python workers are separate
-    processes, so the allocation storm never meets a shared heap).
-    ``normalize_name_py`` is the tested byte-parity twin of
-    ``normalize_name_col``; the driver-contract queries keep the native
-    column form so DuckDB oracles can mirror it.
-    """
-    ex = html.map(extract_text_py)
-    return pd.DataFrame({"extracted_text": ex, "norm_text": ex.map(normalize_name_py)})
-
-
-def with_extracted(df, url_col: str = "url", html_col: str = "html"):
-    """Add ``extracted_text`` + ``norm_domain`` columns to a pages frame."""
-    return df.withColumn("extracted_text", extract_text_udf(F.col(html_col))).withColumn(
-        "norm_domain", normalized_domain_col(F.col(url_col))
-    )
-
-
 _EXTRACT_SKETCH_SCHEMA = T.StructType(
     [
         T.StructField("extracted_text", T.StringType()),
@@ -272,13 +237,18 @@ def make_extract_sketch_udf(
     """Fully-fused html → (extracted_text, norm_text, simhash, minhash_sig)
     in ONE Arrow round trip.
 
-    The staged form (extract_norm_udf, then sketches.sketch_udf) moves
-    ``norm_text`` across the JVM↔Python boundary twice — once out of the
-    extract UDF, once back into the sketch UDF. On a memory-bandwidth-
-    bound host (and at 100 TB, where Arrow transfer is real network/memcpy
-    traffic) that second round trip is pure waste: the pipeline's hot path
-    uses this fused kernel instead. Values are IDENTICAL to the staged
-    form (same extract/normalize/sketch kernels; parity-tested).
+    Separate extract and sketch UDFs would move ``norm_text`` across the
+    JVM↔Python boundary twice — once out of the extract UDF, once back
+    into the sketch UDF. On a memory-bandwidth-bound host (and at 100 TB,
+    where Arrow transfer is real network/memcpy traffic) that second round
+    trip is pure waste, so every stage-1+2 caller (in-memory and
+    checkpointed pipeline, incremental fold, stream ingest) runs this one
+    kernel. Values equal the scalar twins' (``extract_text_py`` →
+    ``normalize_name_py`` → ``sketches.simhash_minhash_py``; parity-tested).
+    Normalization runs here in Python, not as the ``normalize_name_col``
+    JVM chain: its 16 ``regexp_replace`` calls allocate ~16 strings per
+    row and collapse under GC contention at high thread counts (measured
+    37 s vs 5 s for 500k rows at local[32]).
 
     Bytes knobs for the in-memory hot path (Catalyst prunes columns only
     AFTER the UDF — unwanted fields still cross the Arrow boundary unless
@@ -318,19 +288,3 @@ def make_extract_sketch_udf(
 
     return _fused
 
-
-def with_extracted_normalized(df, url_col: str = "url", html_col: str = "html"):
-    """Pipeline stage-1 projection: fused extract+normalize UDF plus the
-    native domain key; drops the heavy ``html`` binary (never needed
-    downstream — at 100 TB, carrying raw html past extraction quadruples
-    every later checkpoint and cache)."""
-    out = df.withColumn("_exn", extract_norm_udf(F.col(html_col))).withColumn(
-        "norm_domain", normalized_domain_col(F.col(url_col))
-    )
-    keep = [c for c in df.columns if c != html_col]
-    return out.select(
-        *keep,
-        "norm_domain",
-        F.col("_exn.extracted_text").alias("extracted_text"),
-        F.col("_exn.norm_text").alias("norm_text"),
-    )

@@ -1,11 +1,12 @@
-"""Sketch functions (SimHash, MinHash, shingles) as *native* Spark column
-expressions.
+"""Native Spark column expressions around the sketches: tokens, k-word
+shingles, LSH band keys and the MinHash Jaccard estimate.
 
-Everything here runs JVM-side via higher-order array functions +
-``xxhash64`` — no Python UDFs, no explode/shuffle. A 64-bit SimHash over a
-doc with S shingles costs O(64·S) JVM ops inside the row, which beats an
-explode → groupBy(64 sums) formulation by removing a full shuffle of
-S×rows intermediate rows (the thing that would dominate at 100 TB).
+The sketches themselves (64-bit SimHash, MinHash signature) are computed
+by one numpy kernel, ``functions/sketches.py`` — fused with extraction in
+``extract.make_extract_sketch_udf`` for the pipeline; the portable md5
+family in ``functions/portable.py`` is the DuckDB-mirrored oracle. What
+is here runs JVM-side (higher-order array functions + ``xxhash64``), with
+no Python UDF and no explode/shuffle.
 
 Graft analog of the reference's blocking-variant generation
 (/root/reference/src/matching_engine.py:60-79): per-record keys that equal
@@ -50,37 +51,6 @@ def word_shingles(tokens: Column, k: int = 3) -> Column:
     return let_bound(tokens, body)
 
 
-def simhash64(shingles: Column) -> Column:
-    """64-bit SimHash of a shingle array, fully native.
-
-    For each shingle h=xxhash64(s): bit i contributes +1 if set else -1;
-    final bit i = 1 iff the sum is > 0. Returns LongType (bit 63 lands in
-    the sign bit — equality/banding still work).
-    """
-    masks = [F.shiftleft(F.lit(1).cast("long"), i) for i in range(SIMHASH_BITS)]
-
-    def bit_votes(h: Column) -> Column:
-        return F.array(
-            *[
-                F.when(h.bitwiseAND(m) != 0, F.lit(1)).otherwise(F.lit(-1)).cast("long")
-                for m in masks
-            ]
-        )
-
-    init = F.array(*[F.lit(0).cast("long")] * SIMHASH_BITS)
-    counts = F.aggregate(
-        shingles,
-        init,
-        lambda acc, s: F.zip_with(acc, bit_votes(F.xxhash64(s)), lambda a, b: a + b),
-    )
-    bits = F.zip_with(
-        counts,
-        F.array(*masks),
-        lambda c, m: F.when(c > 0, m).otherwise(F.lit(0).cast("long")),
-    )
-    return F.aggregate(bits, F.lit(0).cast("long"), lambda a, b: a.bitwiseOR(b))
-
-
 def simhash_bands(simhash: Column, n_bands: int = 4) -> Column:
     """Split a 64-bit simhash into ``n_bands`` equal-width band keys.
 
@@ -95,25 +65,6 @@ def simhash_bands(simhash: Column, n_bands: int = 4) -> Column:
         band_val = F.shiftrightunsigned(simhash, b * width).bitwiseAND(F.lit(mask))
         parts.append(F.concat(F.lit(f"sh{b}:"), F.conv(band_val.cast("string"), 10, 16)))
     return F.array(*parts)
-
-
-def minhash_signature(shingles: Column, k: int = 16) -> Column:
-    """k-perm MinHash signature: sig[i] = min over shingles of
-    xxhash64(shingle, i). Native (transform + array_min per seed).
-
-    NB: the per-seed lambda must be 1-arg — PySpark passes the array
-    index to 2-arg lambdas, which would silently replace the seed.
-    """
-
-    def seeded(seed: int):
-        return lambda s: F.xxhash64(s, F.lit(seed))
-
-    # bind the shingle array once: the k per-seed transforms otherwise
-    # each re-evaluate an inline shingle construction (k× the work)
-    return let_bound(
-        shingles,
-        lambda sh: F.array(*[F.array_min(F.transform(sh, seeded(i))) for i in range(k)]),
-    )
 
 
 def minhash_band_keys(sig: Column, n_bands: int = 4, k: int = 16) -> Column:

@@ -1,11 +1,13 @@
 """Fast sketch computation: one Arrow-batched pandas UDF producing
 (simhash64, minhash signature) per document.
 
-This is the pipeline's hot path. The pure-SQL higher-order-function
-versions in ``hashing.py`` are semantically equivalent shapes but
-interpreted per array element by Spark (no codegen for HOFs) — measured
-~1 ms/doc; this batch-vectorized numpy path is ~75 µs/doc on 170-word
-docs (~0.4 µs/word; 4.4× the round-1 per-doc-loop kernel):
+This is the engine's only SimHash/MinHash implementation (the pipeline
+runs it fused with extraction, ``extract.make_extract_sketch_udf``; the
+md5 family in ``portable.py`` is a separate DuckDB-mirrored oracle with
+its own values). It is numpy, not higher-order-function SQL, because
+Spark interprets HOFs per array element (no codegen), measured ~1 ms/doc,
+while this batch-vectorized path is ~75 µs/doc on 170-word docs
+(~0.4 µs/word; 4.4× the round-1 per-doc-loop kernel):
 
 * one stable 64-bit hash per *unique word* per Arrow batch (blake2b, C
   speed, process/platform independent — NOT Python ``hash()``), cached in

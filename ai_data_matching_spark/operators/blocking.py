@@ -11,6 +11,11 @@ Graft analog of the reference's two-phase cascade:
 * reference leftover anti-join (/root/reference/src/matching_engine.py:129-133)
   → candidate pairs that are NOT exact go to phase-2 scoring.
 
+Sketches and keys come from ONE kernel: ``with_extract_sketch_keys``
+(fused extract → normalize → numpy sketch, one Arrow round trip) is the
+only stage-1+2 path — in-memory and checkpointed pipeline, fold and
+stream ingest alike.
+
 Skew handling ("explicit skew splitting of hot domains", BASELINE.json):
 
 * Block keys = normalized domain + simhash LSH bands. A frequency scan
@@ -31,15 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..extract import normalized_domain_col
-from ..functions.hashing import (
-    minhash_band_keys,
-    minhash_signature,
-    simhash64,
-    simhash_bands,
-    tokens_col,
-    word_shingles,
-)
+from ..extract import make_extract_sketch_udf, normalized_domain_col
+from ..functions.hashing import simhash_bands
 
 DEFAULT_MAX_BLOCK_SIZE = 64
 
@@ -87,53 +85,6 @@ def latest_crawl_wins(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def with_blocking_keys(
-    pages: DataFrame,
-    text_col: str = "norm_text",
-    url_col: str = "url",
-    n_simhash_bands: int = 4,
-    minhash_k: int = 16,
-    use_minhash_bands: bool = False,
-    fast_sketches: bool = True,
-) -> DataFrame:
-    """Add sketch + blocking-key columns to a normalized pages frame.
-
-    Adds: ``norm_domain``, ``simhash``, ``minhash_sig``, ``block_keys``
-    (array<string>: domain key + simhash band keys [+ minhash band keys]).
-    One narrow projection, no shuffle. ``fast_sketches`` uses the
-    numpy-vectorized Arrow UDF (~20× faster than the interpreted
-    higher-order-function expressions — see functions/sketches.py); set
-    False for the pure-SQL path (no Python workers needed).
-    """
-    if fast_sketches:
-        from ..functions.sketches import make_sketch_udf
-
-        df = (
-            pages.withColumn("norm_domain", normalized_domain_col(F.col(url_col)))
-            .withColumn("_sk", make_sketch_udf(3, minhash_k)(F.col(text_col)))
-            .withColumn("simhash", F.col("_sk.simhash"))
-            .withColumn("minhash_sig", F.col("_sk.minhash_sig"))
-            .drop("_sk")
-        )
-    else:
-        toks = tokens_col(F.col(text_col))
-        sh = word_shingles(toks, k=3)
-        df = (
-            pages.withColumn("norm_domain", normalized_domain_col(F.col(url_col)))
-            .withColumn("_shingles", sh)
-            .withColumn("simhash", simhash64(F.col("_shingles")))
-            .withColumn("minhash_sig", minhash_signature(F.col("_shingles"), k=minhash_k))
-            .drop("_shingles")
-        )
-    block_keys = F.concat(
-        F.array(F.concat(F.lit("dom:"), F.col("norm_domain"))),
-        simhash_bands(F.col("simhash"), n_simhash_bands),
-    )
-    if use_minhash_bands:
-        block_keys = F.concat(block_keys, minhash_band_keys(F.col("minhash_sig"), k=minhash_k))
-    return df.withColumn("block_keys", block_keys)
-
-
 def with_extract_sketch_keys(
     pages: DataFrame,
     url_col: str = "url",
@@ -145,16 +96,17 @@ def with_extract_sketch_keys(
     emit_extracted: bool = True,
     text_prefix: int | None = None,
 ) -> DataFrame:
-    """Fused stage 1+2: html → extract → normalize → sketch → blocking keys
-    with ONE Arrow round trip (extract.make_extract_sketch_udf) — the
-    staged ``with_blocking_keys(with_extracted_normalized(df))`` form moves
-    norm_text out of and back into Python. Emits exactly the staged form's
-    columns (order included), so both paths are interchangeable.
-    ``emit_extracted=False`` / ``text_prefix`` are the hot-path byte knobs
-    (see make_extract_sketch_udf) — the extracted_text column is then
-    absent from the output."""
-    from ..extract import make_extract_sketch_udf
+    """Stage 1+2, the only path: html → extract → normalize → sketch →
+    blocking keys with ONE Arrow round trip (extract.make_extract_sketch_udf).
 
+    Emits the input columns minus ``html`` and ``drop_cols``, then
+    ``norm_domain``, ``extracted_text``, ``norm_text``, ``simhash``,
+    ``minhash_sig`` and ``block_keys`` (array<string>: the ``dom:`` domain
+    key + ``shN:`` simhash band keys). One narrow projection, no shuffle.
+    ``emit_extracted=False`` / ``text_prefix`` are the in-memory hot
+    path's byte knobs (see make_extract_sketch_udf) — extracted_text is
+    then absent and norm_text a prefix; the sketches always cover the
+    full normalized text."""
     fused = make_extract_sketch_udf(shingle_k, minhash_k, emit_extracted, text_prefix)
     out = pages.withColumn("_f", fused(F.col(html_col))).withColumn(
         "norm_domain", normalized_domain_col(F.col(url_col))

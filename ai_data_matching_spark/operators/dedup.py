@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_tracked
 from ..functions.hof import let_bound as _let
-from ..functions.hashing import simhash_bands
+from ..functions.hashing import minhash_band_keys, simhash_bands
 from ..partitioning import fan_out
 
 
@@ -89,7 +89,10 @@ def duplicate_pairs_minhash_lsh(
     from ..functions.sketches import MINHASH_K, make_shingles_udf, make_sketch_udf
 
     assert minhash_k == MINHASH_K, "fast sketch UDF emits fixed-k signatures"
-    rows_per_band = minhash_k // n_bands
+    # raises unless the bands tile the signature: a ragged tiling would
+    # drop signature rows, and bands past its end slice to [] — one
+    # corpus-sized bucket per band, so the verify would run over all pairs
+    band_keys = minhash_band_keys(F.col("_sig"), n_bands, k=minhash_k)
     base = fan_out(
         docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
     ).select(
@@ -105,28 +108,7 @@ def duplicate_pairs_minhash_lsh(
     # after the cross-band dedup, exactly like blocking.candidate_pairs'
     # payload join.
     base = persist_tracked(base)
-    bands = base.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"b{b}:"),
-                        F.xxhash64(
-                            F.array_join(
-                                F.transform(
-                                    F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band),
-                                    lambda x: x.cast("string"),
-                                ),
-                                "_",
-                            )
-                        ).cast("string"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bucket"),
-    )
+    bands = base.select("id", F.explode(band_keys).alias("bucket"))
     return _verify_jaccard(base, bands, jaccard_threshold)
 
 

@@ -15,14 +15,15 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import FUZZY_THRESHOLD, with_extracted_normalized
+from .extract import FUZZY_THRESHOLD
 from .operators.blocking import (
     DEFAULT_MAX_BAND_HAMMING,
     DEFAULT_MAX_BLOCK_SIZE,
     candidate_pairs,
     exact_match_edges,
+    latest_crawl_wins,
     route_unmatched,
-    with_blocking_keys,
+    with_extract_sketch_keys,
 )
 from .operators.clustering import cluster_assignments, connected_components
 from .operators.consolidate import consolidate_clusters, match_statistics
@@ -101,80 +102,80 @@ def run_pipeline(
             resumed.append(name)
         return df
 
-    # stages 1+2 — fused extract + normalize pandas UDF (one Arrow pass)
-    # then sketches + blocking keys; both are narrow projections, so in
-    # the in-memory path they fuse into ONE persisted frame (two separate
-    # stage caches would carry the big strings twice — columnar cache
-    # builds are the multi-core memory-bandwidth bottleneck on one box).
-    # The heavy html binary AND the upstream text copy are dropped at the
-    # head: extracted_text is the engine's canonical text from here on.
-    # With a snapshot layer the stages stay separate (resume granularity
-    # beats cache bytes when each stage is durably committed anyway).
-    def _extract(df: DataFrame) -> DataFrame:
-        return with_extracted_normalized(df).drop("text")
-
-    def _sketch(df: DataFrame) -> DataFrame:
-        return with_blocking_keys(
-            df, n_simhash_bands=cfg.n_simhash_bands, minhash_k=cfg.minhash_k
-        )
-
     def _dedup(df: DataFrame) -> DataFrame:
         """Resolve re-crawls: the blocked frame (and with io, its
         committed snapshot — the state an incremental fold chains on) is
         url-unique by contract, latest crawl wins. Same deterministic
         rule as the fold's within-batch dedup (blocking.latest_crawl_wins),
         so corpus-at-once and batched ingestion pick identical survivors."""
-        if not cfg.dedup_recrawls:
-            return df
-        from .operators.blocking import latest_crawl_wins
+        return latest_crawl_wins(df) if cfg.dedup_recrawls else df
 
-        return latest_crawl_wins(df)
+    # stages 1+2 — ONE fused kernel (with_extract_sketch_keys): extract +
+    # normalize + sketch + blocking keys in a single Arrow round trip. The
+    # heavy html binary AND the upstream text copy are dropped at the
+    # head: extracted_text is the engine's canonical text from here on.
+    def _extract_sketch(**knobs) -> DataFrame:
+        return with_extract_sketch_keys(
+            pages,
+            n_simhash_bands=cfg.n_simhash_bands,
+            minhash_k=cfg.minhash_k,
+            **knobs,
+        )
 
     if io is None:
-        # fully-fused stage 1+2 — one Arrow round trip for
-        # extract+normalize+sketch (see with_extract_sketch_keys); the
-        # staged form below would move norm_text through Python twice.
-        # The kernel omits extracted_text from the Arrow return and
-        # truncates norm_text to the scoring prefix: no consumer of the
-        # in-memory path reads page text beyond MAX_SCORE_CHARS (scoring
-        # slices to it anyway; exact groups compare sketches), so the
-        # stage cache — the dominant memory-bandwidth term on one box,
+        # In memory the kernel omits extracted_text from the Arrow return
+        # and truncates norm_text to the scoring prefix: no consumer of
+        # the in-memory path reads page text beyond MAX_SCORE_CHARS
+        # (scoring slices to it anyway; exact groups compare sketches), so
+        # the stage cache — the dominant memory-bandwidth term on one box,
         # and the dominant cache/shuffle bytes at 100 TB — stops carrying
         # the corpus. Durable-text users run the io path, whose committed
         # extract snapshot keeps the full byte-identical text per url.
         from .functions.similarity import MAX_SCORE_CHARS
-        from .operators.blocking import with_extract_sketch_keys
 
         blocked = stage(
             "blocked",
             lambda: _dedup(
-                with_extract_sketch_keys(
-                    pages,
-                    n_simhash_bands=cfg.n_simhash_bands,
-                    minhash_k=cfg.minhash_k,
-                    emit_extracted=False,
-                    text_prefix=MAX_SCORE_CHARS,
-                )
+                _extract_sketch(emit_extracted=False, text_prefix=MAX_SCORE_CHARS)
             ),
         )
     else:
-        extracted = stage("extract", lambda: _extract(pages))
-        # extracted_text is not carried into the blocked snapshot: every
-        # consumer (exact groups, pair generation, payload attach) reads
-        # only (url, norm_domain, norm_text, sketches). norm_text_hash is
-        # committed alongside so an incremental fold can classify
-        # re-crawled urls (content changed vs replay) by comparing
-        # fixed-width columns only — without it every fold re-reads and
-        # re-hashes the whole history's norm_text, the one wide column,
-        # just to answer "did this url's content change?"
-        blocked = stage(
-            "blocked",
-            lambda: _dedup(
-                _sketch(extracted.drop("extracted_text")).withColumn(
+        # With a snapshot layer the kernel's full output (extracted_text,
+        # full-length norm_text, sketches, keys) is committed as the
+        # `extract` stage — the only durable copy of the extracted text —
+        # and `blocked` is a projection of it, so resume granularity stays
+        # per stage while the Python kernel runs once.
+        extracted = stage("extract", _extract_sketch)
+
+        def _blocked() -> DataFrame:
+            # an extract snapshot committed by older code (staged
+            # extract → sketch chain) carries no sketches; committing a
+            # blocked snapshot from it would make every rerun resume a
+            # sketchless state, so refuse before anything is written
+            sketch_cols = ("simhash", "minhash_sig", "block_keys")
+            missing = [c for c in sketch_cols if c not in extracted.columns]
+            if missing:
+                raise ValueError(
+                    f"committed 'extract' snapshot lacks {missing}: it was "
+                    "written by an older stage-1 layout; drop that snapshot "
+                    "(or use a fresh table root) and rerun"
+                )
+            # extracted_text is not carried into the blocked snapshot:
+            # every consumer (exact groups, pair generation, payload
+            # attach) reads only (url, norm_domain, norm_text, sketches).
+            # norm_text_hash is committed alongside so an incremental fold
+            # can classify re-crawled urls (content changed vs replay) by
+            # comparing fixed-width columns only — without it every fold
+            # re-reads and re-hashes the whole history's norm_text, the
+            # one wide column, just to answer "did this url's content
+            # change?"
+            return _dedup(
+                extracted.drop("extracted_text").withColumn(
                     "norm_text_hash", F.xxhash64("norm_text")
                 )
-            ),
-        )
+            )
+
+        blocked = stage("blocked", _blocked)
 
     # stage 3 — phase-1 exact star edges
     exact = stage("exact_edges", lambda: exact_match_edges(blocked))

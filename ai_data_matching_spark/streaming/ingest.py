@@ -48,8 +48,8 @@ def read_page_stream(
 def stream_extract_sketch(pages: DataFrame) -> DataFrame:
     """Stage 1+2 on a stream: the batch path's fully-fused
     extract+normalize+sketch kernel (ONE Arrow round trip per micro-batch)
-    + native blocking keys — projection-only, stream-safe. ``text`` is
-    kept (stream schema parity with the staged form)."""
+    + native blocking keys — projection-only, stream-safe. The source
+    ``text`` column is kept in the landed table (``drop_cols=()``)."""
     from ..operators.blocking import with_extract_sketch_keys
 
     return with_extract_sketch_keys(pages, drop_cols=())

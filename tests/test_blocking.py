@@ -7,8 +7,17 @@ from ai_data_matching_spark.operators.blocking import (
     candidate_pairs,
     exact_match_edges,
     salted_equijoin,
-    with_blocking_keys,
+    with_extract_sketch_keys,
 )
+
+
+def _keyed(df):
+    """Stage 1+2 over (url, norm_text, lang) rows: the text goes through
+    the kernel as tag-free html, so extraction keeps it and normalization
+    only lowercases it."""
+    return with_extract_sketch_keys(
+        df.withColumn("html", F.encode("norm_text", "utf-8")), drop_cols=("norm_text",)
+    )
 
 
 def _blocked(spark):
@@ -19,7 +28,7 @@ def _blocked(spark):
         ("http://b.com/1", "totally different words here now ok", "en"),
     ]
     df = spark.createDataFrame(rows, "url string, norm_text string, lang string")
-    return with_blocking_keys(df)
+    return _keyed(df)
 
 
 def test_simhash_deterministic_and_near(spark):
@@ -51,7 +60,7 @@ def test_candidate_pairs_and_hot_key_exclusion(spark):
         ("http://c.com/2", "shared cold text one two four", "en"),
     ]
     df = spark.createDataFrame(hot + cold, "url string, norm_text string, lang string")
-    blocked = with_blocking_keys(df)
+    blocked = _keyed(df)
     pairs, overflow = candidate_pairs(blocked, max_block_size=10)
     ov = {r["block_key"] for r in overflow.collect()}
     assert "dom:hub.com" in ov
@@ -73,7 +82,7 @@ def test_band_pairs_hamming_filtered(spark):
         ("http://y.com/b", "completely unrelated content words here", "en"),  # same domain, far text
     ]
     df = spark.createDataFrame(rows, "url string, norm_text string, lang string")
-    pairs, _ = candidate_pairs(with_blocking_keys(df))
+    pairs, _ = candidate_pairs(_keyed(df))
     got = {(r["url_a"], r["url_b"]) for r in pairs.collect()}
     # same-domain pair kept even though texts are unrelated
     assert ("http://y.com/a", "http://y.com/b") in got
@@ -110,21 +119,61 @@ def test_exact_edges_null_domain_group_kept(spark):
     assert got == {("u2", "u1")}
 
 
-def test_fused_extract_sketch_parity(spark):
-    """with_extract_sketch_keys (one Arrow pass) must equal the staged
-    with_blocking_keys(with_extracted_normalized(df)) path — columns,
-    order, and values."""
-    from ai_data_matching_spark.extract import with_extracted_normalized
-    from ai_data_matching_spark.operators.blocking import with_extract_sketch_keys
+def _twin(html: bytes):
+    """Scalar reference for one page: extract_text_py → normalize_name_py
+    → simhash_minhash_py, with the blocking keys in their string format."""
+    from ai_data_matching_spark.extract import extract_text_py, normalize_name_py
+    from ai_data_matching_spark.functions.sketches import simhash_minhash_py
+
+    ex = extract_text_py(html)
+    nm = normalize_name_py(ex)
+    sim, sig = simhash_minhash_py(nm, 3, 16)
+    bands = [f"sh{b}:{((sim % 2**64) >> (16 * b)) & 0xFFFF:X}" for b in range(4)]
+    return ex, nm, sim, sig, bands
+
+
+def _kernel_rows(spark, **knobs):
     from ai_data_matching_spark.synth import generate_pages
 
     pages = generate_pages(spark, 200, seed=11).drop("entity_id")
-    staged = with_blocking_keys(with_extracted_normalized(pages).drop("text"))
-    fused = with_extract_sketch_keys(pages)
-    assert fused.columns == staged.columns
-    a = sorted(map(tuple, staged.collect()))
-    b = sorted(map(tuple, fused.collect()))
-    assert a == b
+    out = with_extract_sketch_keys(pages.withColumn("raw", F.col("html")), **knobs)
+    return pages, out, out.collect()
+
+
+def test_fused_extract_sketch_parity(spark):
+    """The stage-1+2 kernel equals its scalar twins row by row — text,
+    sketches, and the dom:/shN: key format — and emits the documented
+    columns in order."""
+    pages, out, rows = _kernel_rows(spark)
+    keep = [c for c in pages.columns if c not in ("html", "text")]
+    assert out.columns == keep + [
+        "raw", "norm_domain", "extracted_text", "norm_text",
+        "simhash", "minhash_sig", "block_keys",
+    ]
+    assert len(rows) == pages.count() > 0
+    for r in rows:
+        ex, nm, sim, sig, bands = _twin(bytes(r["raw"]))
+        assert r["extracted_text"] == ex
+        assert r["norm_text"] == nm
+        assert r["simhash"] == sim and list(r["minhash_sig"]) == sig
+        assert r["block_keys"] == [f"dom:{r['norm_domain']}"] + bands
+
+
+def test_extract_sketch_kernel_byte_knobs(spark):
+    """emit_extracted=False drops extracted_text; text_prefix returns an
+    exact norm_text prefix while the sketches still cover the full text."""
+    prefix = 40
+    _, out, rows = _kernel_rows(spark, emit_extracted=False, text_prefix=prefix)
+    assert "extracted_text" not in out.columns
+    truncated = 0
+    for r in rows:
+        _, full, sim, sig, bands = _twin(bytes(r["raw"]))
+        assert r["norm_text"] == full[:prefix]
+        assert r["simhash"] == sim and list(r["minhash_sig"]) == sig
+        assert r["block_keys"][1:] == bands
+        truncated += len(full) > prefix
+    # the prefix must actually cut, or the full-text claim is untested
+    assert truncated > 0
 
 
 def test_latest_crawl_wins_is_column_order_independent(spark):
@@ -149,27 +198,3 @@ def test_latest_crawl_wins_is_column_order_independent(spark):
         for r in latest_crawl_wins(df.select("url", "warc_ts", "lang")).collect()
     }
     assert out2 == {"u1": "aa"}
-
-
-def test_minhash_band_keys_tile_any_k(spark):
-    """Band keys must tile the signature for non-default k (regression:
-    rows_per_band was hardcoded to 4, so k=8 sliced past the signature and
-    bands 2-3 collapsed to one constant key for every doc)."""
-    from ai_data_matching_spark.functions.hashing import minhash_band_keys
-
-    rows = [
-        ("http://a.com/1", "alpha beta gamma delta epsilon zeta", "en"),
-        ("http://b.com/1", "totally different words here now ok", "en"),
-    ]
-    base = spark.createDataFrame(rows, "url string, norm_text string, lang string")
-    df = with_blocking_keys(base, minhash_k=8, use_minhash_bands=True)
-    rows = df.select("block_keys").collect()
-    mh = [sorted(k for k in r["block_keys"] if k.startswith("mh")) for r in rows]
-    # with 4 bands over k=8 every doc gets 4 distinct mh keys, and docs with
-    # different text must not share all four
-    assert all(len(ks) == 4 for ks in mh)
-    assert len({tuple(ks) for ks in mh}) > 1
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        minhash_band_keys(F.col("minhash_sig"), n_bands=3, k=16)

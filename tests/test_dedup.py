@@ -53,6 +53,31 @@ def test_minhash_lsh_finds_near_dups(neardup_docs):
     assert not any(4 in p or 5 in p for p in got)
 
 
+def test_minhash_lsh_bands_must_tile_signature(neardup_docs):
+    """Band keys must tile the 16-row signature: any tiling finds the
+    planted near-dups, and a ragged one raises instead of dropping rows
+    (n_bands=3) or slicing past the signature into one corpus-sized
+    bucket per band (n_bands=32)."""
+    for n_bands in (2, 4, 16):
+        pairs = duplicate_pairs_minhash_lsh(
+            neardup_docs, n_bands=n_bands, jaccard_threshold=0.5
+        )
+        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        assert (1, 2) in got, n_bands
+        assert not any(4 in p or 5 in p for p in got), n_bands
+    for n_bands in (3, 32):
+        with pytest.raises(ValueError):
+            duplicate_pairs_minhash_lsh(neardup_docs, n_bands=n_bands)
+
+    # the shared band-key helper tiles any signature length: 4 bands over
+    # k=8 are 4 distinct slices, not slices past the end (all equal)
+    from ai_data_matching_spark.functions.hashing import minhash_band_keys
+
+    sig = neardup_docs.sparkSession.createDataFrame([(list(range(8)),)], "sig array<long>")
+    keys = sig.select(minhash_band_keys(F.col("sig"), 4, k=8)).first()[0]
+    assert len({k.split(":")[1] for k in keys}) == 4
+
+
 def test_simhash_finds_near_dups(neardup_docs):
     pairs = duplicate_pairs_simhash(neardup_docs, max_hamming=8)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from ai_data_matching_spark.extract import (
     extract_text_py,
-    extract_text_udf,
     normalize_name_col,
     normalize_name_py,
     normalized_domain_col,
@@ -69,14 +68,25 @@ def test_extractor_deterministic_and_strips_noise():
     assert extract_text_py(b"") == ""
 
 
-def test_extract_udf_byte_identical_to_scalar(spark, pages_small):
+def test_extract_udf_byte_identical_to_scalar(spark, pages_small, tmp_path):
     """The per-row invariant from BASELINE.json input_hint: extracted text
-    is byte-identical per url (UDF output == stored text column == scalar
-    function output)."""
-    df = pages_small.withColumn("ex", extract_text_udf(F.col("html")))
-    mismatches = df.filter(F.col("ex") != F.col("text")).count()
-    assert mismatches == 0
-    sample = df.select("html", "text").limit(20).collect()
+    is byte-identical per url — the committed ``extract`` snapshot (the
+    only durable copy of it) == stored text column == scalar function
+    output."""
+    from dataclasses import asdict
+
+    from ai_data_matching_spark.pipeline import PipelineConfig, run_pipeline
+    from ai_data_matching_spark.sources.tables import TableIO, config_fingerprint
+
+    io = TableIO(str(tmp_path / "snaps"))
+    run_pipeline(spark, pages_small.drop("entity_id"), io=io)
+    rec = io.last_committed("extract", config_fingerprint(asdict(PipelineConfig())))
+    snap = io.read_snapshot(spark, rec).select("url", "extracted_text")
+    stored = pages_small.select("url", F.col("text").alias("extracted_text"))
+    assert snap.count() == stored.count() > 0
+    assert snap.exceptAll(stored).count() == 0
+    assert stored.exceptAll(snap).count() == 0
+    sample = pages_small.select("html", "text").limit(20).collect()
     for r in sample:
         assert extract_text_py(bytes(r["html"])) == r["text"]
 

@@ -73,3 +73,26 @@ def test_killed_pipeline_resumes_and_matches_fresh_run(spark, pages_small, tmp_p
         (r["url"], r["cluster_id"]) for r in fresh.assigned.select("url", "cluster_id").collect()
     }
     assert got == want
+
+
+def test_sketchless_extract_snapshot_refused_before_blocked_commit(
+    spark, pages_small, tmp_path
+):
+    """An ``extract`` snapshot in the older stage-1 layout (text columns,
+    no sketches) must make the blocked stage raise BEFORE it commits —
+    otherwise a sketchless blocked snapshot is committed and every rerun
+    resumes it."""
+    from dataclasses import asdict
+
+    from ai_data_matching_spark.operators.blocking import with_extract_sketch_keys
+
+    io = TableIO(str(tmp_path / "pipe"))
+    pages = pages_small.drop("entity_id")
+    fp = config_fingerprint(asdict(PipelineConfig()))
+    old_layout = with_extract_sketch_keys(pages).drop(
+        "simhash", "minhash_sig", "block_keys"
+    )
+    io.commit(old_layout, "extract", fp, extra={"cfg_fp": fp})
+    with pytest.raises(ValueError, match="drop that snapshot"):
+        run_pipeline(spark, pages, io=io)
+    assert io.last_committed("blocked", fp) is None
