@@ -19,8 +19,8 @@ only pairs that TOUCH the new batch:
   (skew) exclusion is computed over the UNION block sizes, i.e. the
   same cap decisions a full recompute over history ∪ batch would make
   for the new pairs. Per-batch ingest counts (new / changed /
-  refreshed / dropped) ride the fused per-fold ``batch_metrics_*``
-  frame (one metric action per fold).
+  refreshed / dropped) ride the fold's one ``final`` metric frame
+  (``_metrics/final/<batch_id>``, ``TableIO.write_metrics``).
 * candidate generation — an asymmetric equi-join: new-side keys against
   all-side keys, so old-old pairs are never materialized. Orientation,
   Hamming prefilter, cross-key dedup and payload attach are shared with
@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 
 from ..cache import persist_tracked
 from ..pipeline import PipelineConfig, PipelineResult
-from ..sources.tables import TableIO, config_fingerprint
+from ..sources.tables import TableIO, config_fingerprint, metric_part
 from .blocking import (
     hot_keys,
     latest_crawl_wins,
@@ -578,8 +578,8 @@ def fold_incremental(
     #   * url present, content changed, crawl OLDER    → stale
     #     out-of-order delivery, dropped.
     # Per-batch ingest counts are written as a metric so replay/stale
-    # volume is visible (write happens after the stage, from the cheap
-    # committed snapshot — see the fused batch_metrics write below).
+    # volume is visible (from the cheap committed delta — see the final
+    # metric write at the end of the fold).
     rest = [c for c in BLOCKED_COLS if c != "url"]
 
     def _with_content_hash(df: DataFrame) -> DataFrame:
@@ -757,43 +757,6 @@ def fold_incremental(
             extra=full_extra,
         )
 
-    # Per-fold observability is fused into ONE metric write at the end of
-    # the fold (see batch_metrics below) — each of the four former
-    # standalone writes (ingest counts, block overflow, edge counts,
-    # score histogram) was its own Spark job launch, together a measured
-    # ~2 s of the fold's size-invariant floor (VERDICT r04 item 1/2).
-    # The constituent frames are collected lazily here and unioned in a
-    # long (metric, key, value) layout for a single action.
-    fold_metric_parts: list[DataFrame] = []
-
-    def _metric_part(metric: str, key_col, value_col, src: DataFrame) -> None:
-        fold_metric_parts.append(
-            src.select(
-                F.lit(metric).alias("metric"),
-                key_col.cast("string").alias("key"),
-                value_col.cast("double").alias("value"),
-            )
-        )
-
-    # ingest: new / changed(updated) / refreshed(ts-only) counts from the
-    # slim committed delta, plus the distinct batch-url total; guarded so
-    # resuming a snapshot committed by a pre-status code version skips
-    # the rows instead of failing (dropped_replay_or_stale is derivable:
-    # batch_urls − new − changed − refresh).
-    if "_batch_status" in kept.columns:
-        _metric_part(
-            "batch_ingest",
-            F.col("_batch_status"),
-            F.col("n"),
-            kept.groupBy("_batch_status").agg(F.count("*").alias("n")),
-        )
-        _metric_part(
-            "batch_ingest",
-            F.lit("batch_urls"),
-            F.col("n"),
-            new_pages.select("url").distinct().agg(F.count("*").alias("n")),
-        )
-
     def _edges_delta() -> DataFrame:
         # On a compaction fold the full blocked snapshot was committed
         # just above — read IT back instead of rebuilding _blocked_view(),
@@ -836,12 +799,15 @@ def fold_incremental(
             max_block_size=cfg.max_block_size,
             max_band_hamming=cfg.max_band_hamming,
         )
-        # overflow rows join the fused end-of-fold metric write; the frame
-        # is persisted (hot_keys via incremental_candidate_pairs), so by
-        # write time it is already materialized — a resumed edge stage
-        # never recomputes it, and then (as before) records no overflow
-        _metric_part(
-            "block_overflow", F.col("block_key"), F.col("block_size"), overflow
+        # overflow rows exist only while this stage computes, so they are
+        # written now, before the commit: a crash after the commit resumes
+        # past this stage with them already on disk. The frame is persisted
+        # (hot_keys via incremental_candidate_pairs), so the pair plan
+        # below reuses it.
+        io.write_metrics(
+            batch_id,
+            "edges",
+            [metric_part("block_overflow", F.col("block_key"), F.col("block_size"), overflow)],
         )
         routed = route_unmatched(pairs, exact_inc)
         scored = score_pairs(routed, match_threshold=cfg.fuzzy_threshold).drop(
@@ -887,53 +853,42 @@ def fold_incremental(
     stage_delta("labels", _labels_delta)
     maybe_compact("labels")
 
-    # Per-batch observability is DELTA-scoped. The previous form wrote
-    # the full-state match_statistics row per fold — an O(history)
-    # aggregation per batch, the wrong cost shape at 10^12 docs. The
-    # match-count + score-distribution metrics the checkpoint contract
-    # asks for describe THIS batch's output, which is the committed
-    # O(batch) edge delta; the full-state stats row stays available as
-    # the LAZY ``PipelineResult.stats`` view (zero jobs unless the
-    # caller consumes it), and a compaction batch materializes state
-    # anyway. Edge counts + histogram join the fused write below.
+    # Per-batch metrics are DELTA-scoped: they describe THIS batch's
+    # output (the committed O(batch) edge delta), never an O(history)
+    # aggregation per fold; the full-state stats row stays the LAZY
+    # ``PipelineResult.stats`` view. ONE final write: every part derives
+    # from committed deltas (and the batch's own url set), so a resumed
+    # or replayed fold rewrites the same frame. Ingest: new / changed /
+    # refresh counts plus the distinct batch-url total (dropped replays
+    # and stale crawls = the rest), skipped for a blocked delta committed
+    # by pre-status code. Edge counts: one global aggregate unpivoted, so
+    # both match types always get a row, 0 when the fold emitted none.
     from .scoring import score_histogram
 
-    # one global aggregate (a row even over an empty delta), unpivoted:
-    # both match types always get a row, 0 when the fold emitted none
-    _metric_part(
-        "edge_counts",
-        F.col("match_type"),
-        F.col("n"),
-        edge_delta.agg(
-            *(
-                F.count(F.when(F.col("match_type") == m, 1)).alias(m)
-                for m in ("exact", "fuzzy")
-            )
-        ).unpivot([], ["exact", "fuzzy"], "match_type", "n"),
-    )
-    _metric_part(
-        "score_histogram",
-        F.round(F.col("score_bucket"), 2),
-        F.col("n_pairs"),
-        score_histogram(edge_delta),
-    )
-    # THE fold's one metric action: every per-batch observability frame
-    # (ingest counts, block overflow, edge counts, score histogram) in a
-    # long (metric, key, value) layout under a single write — four Spark
-    # job launches of pure bookkeeping fused into one (VERDICT r05 task 1).
-    # A PURE replay (all three stages resumed — the fold already ran to
-    # completion once) skips the rewrite: the original write holds the
-    # overflow rows, which only exist while the edge stage computes, and
-    # overwriting would erase them for a no-op fold.
-    if set(resumed) != {"blocked", "edges", "labels"}:
-        fused = fold_metric_parts[0]
-        for part in fold_metric_parts[1:]:
-            fused = fused.unionByName(part)
-        io.write_metric(
-            fused.select(F.lit(batch_id).alias("batch_id"), "metric", "key", "value"),
-            "final",
-            f"batch_metrics_{batch_id}",
-        )
+    n = F.count("*").alias("n")
+    by_type = [F.count(F.when(F.col("match_type") == m, 1)).alias(m) for m in ("exact", "fuzzy")]
+    parts = [
+        metric_part(
+            "edge_counts",
+            F.col("match_type"),
+            F.col("n"),
+            edge_delta.agg(*by_type).unpivot([], ["exact", "fuzzy"], "match_type", "n"),
+        ),
+        metric_part(
+            "score_histogram",
+            F.round("score_bucket", 2),
+            F.col("n_pairs"),
+            score_histogram(edge_delta),
+        ),
+    ]
+    if "_batch_status" in kept.columns:
+        by_status = kept.groupBy("_batch_status").agg(n)
+        urls = new_pages.select("url").distinct().agg(n)
+        parts += [
+            metric_part("batch_ingest", F.col("_batch_status"), F.col("n"), by_status),
+            metric_part("batch_ingest", F.lit("batch_urls"), F.col("n"), urls),
+        ]
+    io.write_metrics(batch_id, "final", parts)
 
     return FoldCommit(fp, resumed, cc_iters)
 

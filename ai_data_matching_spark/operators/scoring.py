@@ -95,9 +95,9 @@ def union_edges(exact_edges: DataFrame, fuzzy_edges: DataFrame) -> DataFrame:
 
 def score_histogram(scored: DataFrame, bucket: float = 0.05) -> DataFrame:
     """Score-distribution metric (per BASELINE.json north_rule): counts per
-    rounded score bucket — written alongside each scoring checkpoint."""
+    rounded score bucket — written alongside each scoring checkpoint.
+    Unordered: a global sort inside a metric write costs two Spark jobs."""
     return (
         scored.groupBy((F.floor(F.col("score") / bucket) * bucket).alias("score_bucket"))
         .agg(F.count("*").alias("n_pairs"))
-        .orderBy("score_bucket")
     )

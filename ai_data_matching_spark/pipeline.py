@@ -28,7 +28,7 @@ from .operators.blocking import (
 from .operators.clustering import cluster_assignments, connected_components
 from .operators.consolidate import consolidate_clusters, match_statistics
 from .operators.scoring import fuzzy_match_edges, score_histogram, score_pairs, union_edges
-from .sources.tables import TableIO, config_fingerprint
+from .sources.tables import TableIO, config_fingerprint, metric_part
 
 
 @dataclass
@@ -188,7 +188,13 @@ def run_pipeline(
             max_band_hamming=cfg.max_band_hamming,
         )
         if io is not None:
-            io.write_metric(overflow, "scored", "block_overflow")
+            # overflow rows exist only while this stage computes: written
+            # now, so a resumed run (which skips the stage) still has them
+            io.write_metrics(
+                fp,
+                "scored",
+                [metric_part("block_overflow", F.col("block_key"), F.col("block_size"), overflow)],
+            )
         routed = route_unmatched(pairs, exact)
         return score_pairs(routed, match_threshold=cfg.fuzzy_threshold).drop(
             "sig_a", "sig_b", "text_a", "text_b"
@@ -196,8 +202,6 @@ def run_pipeline(
 
     # consumed once (edge union) — no persist in the in-memory path
     scored = stage("scored", _scored, persist=io is not None)
-    if io is not None:
-        io.write_metric(score_histogram(scored), "scored", "score_histogram")
 
     # stage 5 — edge union
     def _edges() -> DataFrame:
@@ -236,7 +240,20 @@ def run_pipeline(
     clusters = consolidate_clusters(assigned, edges)
     stats = match_statistics(assigned, edges)
     if io is not None:
-        io.write_metric(stats, "final", "match_statistics")
+        # every other metric derives from committed stages: one write,
+        # which a resumed run rewrites unchanged
+        hist = score_histogram(scored)
+        stats_long = stats.select(
+            *(F.col(c).cast("double") for c in stats.columns)
+        ).unpivot([], stats.columns, "key", "value")
+        io.write_metrics(
+            fp,
+            "final",
+            [
+                metric_part("score_histogram", F.round("score_bucket", 2), F.col("n_pairs"), hist),
+                metric_part("match_statistics", F.col("key"), F.col("value"), stats_long),
+            ],
+        )
 
     return PipelineResult(
         assigned=assigned,

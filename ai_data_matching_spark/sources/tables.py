@@ -29,6 +29,10 @@ This is the Iceberg contract, where the schema lives in table metadata,
 never in the data files. A record committed before the field existed
 has no ``schema`` and falls back to the inferring read.
 
+Metrics (base pipeline and fold alike) are long ``(run_id, stage,
+metric, key, value)`` frames at ``_metrics/<stage>/<run_id>``; see
+``TableIO.write_metrics``.
+
 Either way, a snapshot is visible only once its manifest entry lands
 (write-temp + os.replace = atomic on POSIX — same publish-on-commit
 semantics as an Iceberg snapshot commit). Resume = read manifest, match
@@ -42,6 +46,7 @@ layer's own metadata either way.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -110,6 +115,17 @@ def merge_edge_sets(edges: DataFrame) -> DataFrame:
             F.col("_m.score").alias("score"),
             F.col("_m.match_type").alias("match_type"),
         )
+    )
+
+
+def metric_part(metric: str, key, value, src: DataFrame) -> DataFrame:
+    """One metric's long rows ``(metric, key, value)``, one per ``src``
+    row: ``key`` cast to string, ``value`` to double — the part shape
+    ``TableIO.write_metrics`` unions and writes."""
+    return src.select(
+        F.lit(metric).alias("metric"),
+        key.cast("string").alias("key"),
+        value.cast("double").alias("value"),
     )
 
 
@@ -223,12 +239,12 @@ class IcebergSnapshotBackend:
     # -- ident plumbing (unit-testable without an Iceberg jar) -----------
     @staticmethod
     def _safe(part: str) -> str:
-        """Caller-supplied segments (stage, batch-id-bearing metric names)
-        go into UNQUOTED multipart identifiers — a hyphen or dot (e.g.
-        batch_id='2026-08-19' → metric 'batch_ingest_2026-08-19') would
-        raise a ParseException mid-fold. Map anything outside [A-Za-z0-9_]
-        to '_'; the parquet backend accepts the raw name, so sanitizing
-        here keeps both backends accepting the same batch ids."""
+        """Caller-supplied segments (stage, metric run ids) go into
+        UNQUOTED multipart identifiers — a hyphen or dot (e.g. a stream
+        fold's run id 'epoch-3-1a2b3c4d') would raise a ParseException
+        mid-fold. Map anything outside [A-Za-z0-9_] to '_'; the parquet
+        backend accepts the raw name, so sanitizing here keeps both
+        backends accepting the same run ids."""
         return re.sub(r"[^A-Za-z0-9_]", "_", part)
 
     def table_ident(self, stage: str, snapshot_id: str) -> str:
@@ -509,8 +525,26 @@ class TableIO:
                 return self.read_snapshot(spark, rec), True
         return self.commit(compute(), stage, fingerprint, extra=extra), False
 
-    def write_metric(self, df: DataFrame, stage: str, name: str) -> None:
-        self.backend.write_metric(df, stage, name)
+    def write_metrics(self, run_id: str, stage: str, parts: list[DataFrame]) -> None:
+        """Union ``parts`` (``metric_part`` frames) into ONE long frame
+        ``(run_id, stage, metric, key, value)`` at ``_metrics/<stage>/<run_id>``
+        (Iceberg: ``_metrics_<stage>_<run_id>``) — one Spark write.
+        ``run_id`` is the config fingerprint of a base run and the batch id
+        of a fold, so runs keep separate frames. A stage whose metrics
+        exist only while it computes (block overflow) writes them under
+        its own stage name; everything derived from committed output goes
+        in one ``final`` frame, so a resumed run rewrites it unchanged."""
+        self.backend.write_metric(
+            functools.reduce(DataFrame.unionByName, parts).select(
+                F.lit(run_id).alias("run_id"),
+                F.lit(stage).alias("stage"),
+                "metric",
+                "key",
+                "value",
+            ),
+            stage,
+            run_id,
+        )
 
     # -- retention ---------------------------------------------------------
     _STATE_STAGES = ("blocked", "edges", "labels")

@@ -111,13 +111,14 @@ def resolve_stream(
                     spark,
                     batch_df,
                     io,
-                    # the prior fingerprint joins the batch id: a stream
-                    # restarted against a FRESH checkpoint dir renumbers
-                    # epochs from 0, and a bare epoch-N would overwrite
-                    # the original epoch-N's fused batch_metrics frame (ingest,
-                    # block_overflow, score histogram — the observability
-                    # record). A true same-epoch replay recomputes the
-                    # same prior, so its idempotent overwrite is kept.
+                    # the prior fingerprint joins the batch id, which is
+                    # the fold's metric run id: a stream restarted against
+                    # a FRESH checkpoint dir renumbers epochs from 0, and a
+                    # bare epoch-N would overwrite the original epoch-N's
+                    # metric frames (_metrics/{edges,final}/<batch_id> —
+                    # the observability record). A true same-epoch replay
+                    # recomputes the same prior, so its idempotent
+                    # overwrite is kept.
                     batch_id=f"epoch-{epoch_id}-{prior[:8]}",
                     cfg=cfg,
                     prior_fingerprint=prior,

@@ -6,18 +6,15 @@ representative operator queries over the driver tables at
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]``.
 
-The HEADLINE pipeline run is measured at BOTH ``BENCH_PIPELINE_CPUS``
-(default 16) and ``SPARK_GRAFT_CPUS`` (default 32) and the better level
-becomes ``er_pipeline`` — with per-level numbers always reported
-(VERDICT r01 finding 5: never report only the pathological config). The
-optimum moves with the Python-UDF share of the work: round 2's
-vectorized kernels shrank UDF time enough that local[32] overtook
-local[16] on this 32-hw-thread host.
+The HEADLINE pipeline run is measured at ``BENCH_PIPELINE_CPUS`` and at
+``SPARK_GRAFT_CPUS`` (once when they are equal, as by default) and the
+better level becomes ``er_pipeline``, with per-level numbers reported.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR    table dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS      operator-query parallelism (default 32)
-  BENCH_PIPELINE_CPUS   headline pipeline parallelism (default 16)
+  SPARK_GRAFT_CPUS      operator-query parallelism (default os.cpu_count())
+  BENCH_PIPELINE_CPUS   headline pipeline parallelism (default SPARK_GRAFT_CPUS)
+  SPARK_GRAFT_DRIVER_MEM  driver heap (default a quarter of physical RAM)
   BENCH_PAGES           synth corpus size for the pipeline (default 100000)
   BENCH_ONLY            comma-separated subset of query names
   BENCH_PROBE           0 disables the host-noise probe gate (default on)
@@ -97,7 +94,8 @@ def _materialize(df) -> int:
 def _build(cpus: int):
     from ai_data_matching_spark.session import build_session
 
-    extra = {"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")}
+    quarter_ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**20
+    extra = {"spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{quarter_ram_mb}m")}
     if os.path.isdir("/dev/shm"):
         os.makedirs("/dev/shm/spark-bench", exist_ok=True)
         extra["spark.local.dir"] = "/dev/shm/spark-bench"
@@ -277,8 +275,8 @@ def _incremental_section(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    pipe_cpus = int(os.environ.get("BENCH_PIPELINE_CPUS", "16"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    pipe_cpus = int(os.environ.get("BENCH_PIPELINE_CPUS", cpus))
     n_pages = int(os.environ.get("BENCH_PAGES", "100000"))
     only = os.environ.get("BENCH_ONLY")
     # label only — fall back instead of crashing on dirs where 'sf' is not
@@ -309,16 +307,11 @@ def main() -> None:
             if best_level is None or n / dt > best_level[1] / best_level[2]:
                 best_level = (level, n, dt)
             if level == pipe_cpus:
-                # incremental section runs HERE, on the pipe_cpus session:
-                # one JVM = one SparkSession, so this is the only point a
-                # pipe_cpus-parallelism session exists, and that level is
-                # (a) the headline winner on this host and (b) far less
-                # exposed to shared-host contention than the full 32-thread
-                # grab — the r4 interim artifacts measured the fold at 32
-                # threads swinging 20→52 s run-to-run while the 16-core
-                # pipeline leg held steady. The recompute anchor (t_base)
-                # is measured on this same session, so the speedup ratio
-                # stays same-window, same-parallelism.
+                # incremental section runs HERE, on the pipe_cpus session
+                # (one JVM = one SparkSession, so this is the only point a
+                # pipe_cpus-parallelism session exists). The recompute
+                # anchor (t_base) is measured on this same session, so the
+                # speedup ratio stays same-window, same-parallelism.
                 _incremental_section(spark, n_pages, timings, extras)
                 # r05: a second, production-shaped fold leg — 500k-page
                 # corpus at a 19:1 corpus:batch ratio, one anchor+fold

@@ -31,7 +31,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_PAGES = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
 N_FOLDS = int(sys.argv[2]) if len(sys.argv) > 2 else 5
-CPUS = int(sys.argv[3]) if len(sys.argv) > 3 else 16
+CPUS = int(sys.argv[3]) if len(sys.argv) > 3 else os.cpu_count()
 COMPACT_EVERY = int(os.environ.get("CHAIN_COMPACT_EVERY", "3"))
 
 

@@ -15,7 +15,12 @@ from ai_data_matching_spark.sources.tables import (
     IcebergSnapshotBackend,
     ParquetSnapshotBackend,
     TableIO,
+    metric_part,
 )
+
+
+def _count_part(df):
+    return metric_part("n", F.lit("rows"), F.col("n"), df.agg(F.count("*").alias("n")))
 
 
 def test_iceberg_ident_and_ddl_wiring():
@@ -23,16 +28,17 @@ def test_iceberg_ident_and_ddl_wiring():
     b = IcebergSnapshotBackend(spark=None, catalog="prod", namespace="er")
     assert b.table_ident("blocked", "abc123") == "prod.er.blocked_abc123"
     assert b.lineage_ident("blocked", "abc123") == "prod.er.blocked_abc123_lineage"
-    assert b.metric_ident("scored", "score_histogram") == "prod.er._metrics_scored_score_histogram"
+    assert b.metric_ident("final", "5e1e82589df6c10b") == "prod.er._metrics_final_5e1e82589df6c10b"
     assert b.drop_ddl("prod.er.blocked_abc123") == "DROP TABLE IF EXISTS prod.er.blocked_abc123"
     # default namespace
     assert IcebergSnapshotBackend(None, "c").table_ident("s", "i").startswith("c.er_snapshots.")
-    # batch ids with hyphens/dots (run_incremental metric names embed them)
-    # must not produce an unparseable unquoted identifier
+    # metric run ids with hyphens/dots (a stream fold's batch id) must not
+    # produce an unparseable unquoted identifier
     assert (
-        b.metric_ident("blocked", "batch_ingest_2026-08-19.b1")
-        == "prod.er._metrics_blocked_batch_ingest_2026_08_19_b1"
+        b.metric_ident("edges", "epoch-3-1a2b3c4d")
+        == "prod.er._metrics_edges_epoch_3_1a2b3c4d"
     )
+    assert b.metric_ident("final", "2026-08-19.b1") == "prod.er._metrics_final_2026_08_19_b1"
 
 
 class RecordingBackend(ParquetSnapshotBackend):
@@ -90,8 +96,8 @@ def test_tableio_routes_through_backend(spark, tmp_path):
     out2, resumed2 = io.read_or_compute(spark, "labels", "fp1", lambda: 1 / 0)
     assert resumed2 and out2.count() == 10
 
-    io.write_metric(df.agg(F.count("*").alias("n")), "labels", "m1")
-    assert ("write_metric", "labels", "m1") in backend.calls
+    io.write_metrics("r1", "labels", [_count_part(df)])
+    assert ("write_metric", "labels", "r1") in backend.calls
 
     io.read_or_compute(spark, "labels", "fp2", lambda: df)
     report = io.gc(keep_last=1, metrics_keep_days=365)
@@ -107,8 +113,8 @@ def test_gc_metrics_age_prune_keeps_resume(spark, tmp_path):
     io = TableIO(root)
     df = spark.range(5)
     io.read_or_compute(spark, "labels", "fp1", lambda: df)
-    io.write_metric(df.agg(F.count("*").alias("n")), "final", "old_epoch")
-    io.write_metric(df.agg(F.count("*").alias("n")), "final", "new_epoch")
+    io.write_metrics("old_epoch", "final", [_count_part(df)])
+    io.write_metrics("new_epoch", "final", [_count_part(df)])
 
     old_dir = os.path.join(root, "_metrics", "final", "old_epoch")
     backdate = time.time() - 40 * 86400
@@ -119,7 +125,7 @@ def test_gc_metrics_age_prune_keeps_resume(spark, tmp_path):
     assert not os.path.exists(old_dir)
     assert spark.read.parquet(
         os.path.join(root, "_metrics", "final", "new_epoch")
-    ).collect()[0]["n"] == 5
+    ).collect()[0]["value"] == 5
 
     out, resumed = io.read_or_compute(spark, "labels", "fp1", lambda: 1 / 0)
     assert resumed and out.count() == 5

@@ -108,6 +108,50 @@ def test_incremental_resumes_and_chains(spark, pages_small, tmp_path):
     assert _partition(inc2.assigned) == _partition(full.assigned)
 
 
+def test_killed_fold_keeps_block_overflow_metrics(spark, pages_small, tmp_path, monkeypatch):
+    """A fold killed after its edges_delta commit (here: in the label
+    stage) must not lose the edge stage's block-overflow rows. The stage
+    writes them before it commits, so the resumed fold, which skips the
+    edge stage, still has the same rows as a clean fold, and it writes
+    the final frame."""
+    import pytest
+
+    from ai_data_matching_spark.operators import incremental
+
+    cfg = PipelineConfig(best_match_only=False, max_block_size=4)
+    pages = pages_small.drop("entity_id")
+    base = _split(pages, 4, 0).unionByName(_split(pages, 4, 1))
+    batch = _split(pages, 4, 2)
+    root = tmp_path / "snaps"
+    io = TableIO(str(root))
+    run_pipeline(spark, base, io=io, cfg=cfg)
+
+    class Boom(RuntimeError):
+        pass
+
+    def exploding(*a, **k):
+        raise Boom()
+
+    with monkeypatch.context() as m:
+        m.setattr(incremental, "incremental_label_delta", exploding)
+        with pytest.raises(Boom):
+            incremental.fold_incremental(spark, batch, io, "b1", cfg=cfg)
+    fold = incremental.fold_incremental(spark, batch, io, "b1", cfg=cfg)
+    assert set(fold.resumed_stages) == {"blocked", "edges"}
+    # the same batch folded cleanly onto the same prior state
+    incremental.fold_incremental(spark, batch, io, "clean", cfg=cfg)
+
+    def overflow(run_id):
+        rows = spark.read.parquet(str(root / "_metrics" / "edges" / run_id)).collect()
+        return sorted((r["metric"], r["key"], r["value"]) for r in rows)
+
+    want = overflow("clean")
+    assert want and {m for m, _, _ in want} == {"block_overflow"}
+    assert overflow("b1") == want
+    final = spark.read.parquet(str(root / "_metrics" / "final" / "b1"))
+    assert final.filter(F.col("metric") == "edge_counts").count() == 2
+
+
 def test_incremental_requires_committed_base(spark, pages_small, tmp_path):
     import pytest
 
@@ -141,10 +185,10 @@ def test_replayed_batch_is_noop_in_state(spark, pages_small, tmp_path):
     s1 = inc1.stats.collect()[0].asDict()
     s2 = replay.stats.collect()[0].asDict()
     assert s1 == s2
-    # an all-replay fold emits no edges, and its fused metric frame still
+    # an all-replay fold emits no edges, and its final metric frame still
     # carries an edge_counts row per match type, written as 0 (ADVICE #3)
     rows = spark.read.parquet(
-        str(tmp_path / "snaps" / "_metrics" / "final" / "batch_metrics_e1-retry")
+        str(tmp_path / "snaps" / "_metrics" / "final" / "e1-retry")
     ).collect()
     counts = {r["key"]: r["value"] for r in rows if r["metric"] == "edge_counts"}
     assert counts == {"exact": 0.0, "fuzzy": 0.0}
@@ -213,13 +257,11 @@ def test_recrawl_changed_content_updates_state(spark, tmp_path):
     assert rows["http://a.com/1"]["warc_ts"].day == 11  # 2026-01-01 + 10d
     assert blocked.filter(F.col("url") == "http://a.com/1").count() == 1
 
-    # fused per-fold metric frame (ONE write per fold): long layout
-    # (batch_id, metric, key, value)
-    metric_path = os.path.join(
-        str(tmp_path / "snaps"), "_metrics", "final", "batch_metrics_b1"
-    )
+    # the fold's final metric frame (ONE write per fold): long layout
+    # (run_id, stage, metric, key, value), run_id = the batch id
+    metric_path = os.path.join(str(tmp_path / "snaps"), "_metrics", "final", "b1")
     mrows = spark.read.parquet(metric_path).collect()
-    assert all(r["batch_id"] == "b1" for r in mrows)
+    assert all(r["run_id"] == "b1" and r["stage"] == "final" for r in mrows)
     m = {(r["metric"], r["key"]): r["value"] for r in mrows}
     # ingest: 4 batch urls → 1 new, 1 changed, 1 refreshed, 1 dropped
     assert m[("batch_ingest", "batch_urls")] == 4
@@ -798,7 +840,7 @@ def test_fold_spark_job_budget(spark, pages_small, tmp_path):
     of the assigned view included — so future bookkeeping can't silently
     re-add per-fold actions. Most jobs are AQE query-stage
     materializations and broadcast builds inside the three delta commits
-    and the one fused metric write; snapshot reads launch none (the
+    and the two metric writes; snapshot reads launch none (the
     schema comes from the manifest record). The bound is the measured
     count plus ~15% for AQE plan variance. A second fold one chain hop
     deeper may cost only the extra merge-on-read hop's jobs — in the
@@ -824,9 +866,11 @@ def test_fold_spark_job_budget(spark, pages_small, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         prior = res.fingerprint
         jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    # measured at local[4], 8 shuffle partitions: 47 jobs at depth 1 and
-    # 58 at depth 2 (59 / 76 when every snapshot read inferred its schema);
-    # both bounds carry ~15% headroom
+    # measured at local[4], 8 shuffle partitions: 46 jobs at depth 1 and
+    # 57 at depth 2, one of them the edge stage's eager block-overflow
+    # write (47 / 58 with the overflow in the end-of-fold write and a
+    # sorted score histogram; 59 / 76 when every snapshot read inferred
+    # its schema); both bounds carry ~15% headroom
     assert 0 < jobs[0] <= 54, f"depth-1 fold launched {jobs[0]} Spark jobs (budget 54)"
     assert jobs[1] - jobs[0] <= 13, (
         f"depth-2 fold launched {jobs[1]} Spark jobs, {jobs[1] - jobs[0]} more "

@@ -74,6 +74,36 @@ def test_killed_pipeline_resumes_and_matches_fresh_run(spark, pages_small, tmp_p
     }
     assert got == want
 
+    # metrics: the scored stage's overflow frame was written by the killed
+    # run (the resume skipped that stage) and the final frame by the
+    # resume, both keyed by the run's fingerprint in the long layout
+    def metrics(stage, run_id):
+        df = spark.read.parquet(str(tmp_path / "pipe" / "_metrics" / stage / run_id))
+        assert df.columns == ["run_id", "stage", "metric", "key", "value"]
+        rows = df.collect()
+        assert {(r["run_id"], r["stage"]) for r in rows} <= {(run_id, stage)}
+        return rows
+
+    assert {r["metric"] for r in metrics("scored", fp)} <= {"block_overflow"}
+    final = metrics("final", fp)
+    stats = {r["key"]: r["value"] for r in final if r["metric"] == "match_statistics"}
+    assert stats == {k: float(v) for k, v in res.stats.collect()[0].asDict().items()}
+    n_scored = io.last_committed("scored", fp)["row_count"]
+    assert n_scored > 0
+    assert sum(r["value"] for r in final if r["metric"] == "score_histogram") == n_scored
+
+    # a second config on the same root keeps the first run's frames
+    cfg2 = PipelineConfig(fuzzy_threshold=0.9)
+    fp2 = config_fingerprint(asdict(cfg2))
+    assert fp2 != fp
+    run_pipeline(spark, pages, io=io, cfg=cfg2)
+    for run_id in (fp, fp2):
+        metrics("scored", run_id)  # raises when the frame is missing
+        assert {r["metric"] for r in metrics("final", run_id)} == {
+            "score_histogram",
+            "match_statistics",
+        }
+
 
 def test_sketchless_extract_snapshot_refused_before_blocked_commit(
     spark, pages_small, tmp_path
