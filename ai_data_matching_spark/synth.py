@@ -232,29 +232,21 @@ def generate_labeled_pairs(spark: SparkSession, approx_pages: int = 1000, seed: 
     return spark.range(n_units).mapInPandas(gen, schema=LABELS_SCHEMA)
 
 
-def ensure_pages_table(
-    spark: SparkSession,
-    n_pages: int,
-    seed: int = 42,
-    base_dir: str | None = None,
-) -> str:
-    """Write-once parquet cache of the benchmark corpus; returns the path.
+def ensure_pages_table(spark: SparkSession, n_pages: int, seed: int = 42) -> str:
+    """Write-once parquet cache of the ``bench.py`` corpus; returns the path.
 
-    THE canonical cache recipe for every benchmark harness (bench.py,
-    scripts/scaling_bench.py, scripts/textops_scale_bench.py — previously
-    three drifting copies): the key covers (pages, seed, generator source
-    hash) so an edit to :func:`generate_pages` never silently reuses a
-    stale corpus across revisions, and the layout (repartition 32, snappy
-    parquet, ``entity_id`` dropped) is identical for every caller, so
-    timed legs always read the same bytes.
+    The cache lives on tmpfs (``/dev/shm/spark-bench``) when the host has
+    one. Its key covers (pages, seed, generator source hash), so an edit to
+    :func:`generate_pages` never silently reuses a stale corpus across
+    revisions, and the layout (repartition 32, snappy parquet,
+    ``entity_id`` dropped) is fixed, so timed legs always read the same
+    bytes.
     """
     import hashlib
     import inspect
     import os
 
-    base = base_dir or (
-        "/dev/shm/spark-bench" if os.path.isdir("/dev/shm") else "/tmp/spark-bench"
-    )
+    base = "/dev/shm/spark-bench" if os.path.isdir("/dev/shm") else "/tmp/spark-bench"
     tag = hashlib.md5(inspect.getsource(generate_pages).encode()).hexdigest()[:10]
     path = f"{base}/pages-{n_pages}-s{seed}-{tag}.parquet"
     os.makedirs(base, exist_ok=True)

@@ -17,16 +17,12 @@ Env knobs:
   SPARK_GRAFT_DRIVER_MEM  driver heap (default a quarter of physical RAM)
   BENCH_PAGES           synth corpus size for the pipeline (default 100000)
   BENCH_ONLY            comma-separated subset of query names
-  BENCH_PROBE           0 disables the host-noise probe gate (default on)
+  BENCH_INCREMENTAL     0 skips the incremental fold section (default on)
+  BENCH_INC_REPS        anchor+fold reps of that section (default 3)
 
-Host-noise gate: this sandbox's shared-host memory bandwidth swings
-2-3× on multi-minute windows (BENCH/BASELINE.md record) — r02's driver
-headline (4,990 docs/s) was captured in a degraded window while the same
-code measured 7.8-8.0k docs/s in quiet ones. So the bench now probes
-multi-core bandwidth first (same microbenchmark the scaling supervisor
-uses) and, if the window is degraded, waits and re-probes a bounded
-number of times before running anyway — the probe context is always
-reported in the output line so a noisy-window number is labeled as such.
+When the two pipeline levels differ, the line also carries
+``er_pipeline_scaling_efficiency`` = (docs/s at the higher level ÷ docs/s
+at the lower) ÷ (higher ÷ lower cpus): 1.0 is linear scaling.
 """
 
 from __future__ import annotations
@@ -36,53 +32,6 @@ import os
 import re
 import sys
 import time
-
-
-def _probe_gate(tag: str = "") -> dict:
-    """Bandwidth probe + bounded retry, one gate per MEASURED SECTION
-    (r03 verdict item 4: the headline 32-core leg and the incremental
-    fold were both captured in a window the start-of-run probe never
-    saw). ``tag`` namespaces the context keys so the artifact shows
-    which window each section actually ran in; the bare keys stay the
-    overall (first) probe for artifact compatibility. Per-section delay
-    is bounded by BENCH_PROBE_RETRIES × BENCH_PROBE_WAIT, and TOTAL
-    waiting across all sections by BENCH_PROBE_BUDGET seconds (default
-    900) — a fully-degraded host costs bounded extra wall time, never an
-    unbounded search."""
-    if os.environ.get("BENCH_PROBE", "1") == "0":
-        return {}
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
-    try:
-        from scaling_autoretry import probe
-    except ImportError:
-        return {}
-    eff_thresh = float(os.environ.get("BENCH_PROBE_EFF", "0.6"))
-    retries = int(os.environ.get("BENCH_PROBE_RETRIES", "3"))
-    budget = float(os.environ.get("BENCH_PROBE_BUDGET", "900"))
-    attempts = []
-    for i in range(retries + 1):
-        r1, eff4 = probe(4)
-        attempts.append({"probe_1p": round(r1, 1), "probe_eff4": round(eff4, 3)})
-        if eff4 >= eff_thresh:
-            break
-        wait = int(os.environ.get("BENCH_PROBE_WAIT", "120"))
-        if i < retries and _probe_gate._waited + wait <= budget:
-            _probe_gate._waited += wait
-            time.sleep(wait)
-        elif i < retries:
-            break  # global wait budget exhausted — run now, labeled degraded
-    last = attempts[-1]
-    p = f"host_probe_{tag}_" if tag else "host_probe_"
-    d = f"host_window_{tag}_degraded" if tag else "host_window_degraded"
-    return {
-        f"{p}eff4": last["probe_eff4"],
-        f"{p}1p": last["probe_1p"],
-        d: last["probe_eff4"] < eff_thresh,
-        f"{p}attempts": len(attempts),
-    }
-
-
-_probe_gate._waited = 0.0
 
 
 def _materialize(df) -> int:
@@ -102,14 +51,12 @@ def _build(cpus: int):
     return build_session(
         app_name="bench",
         master=f"local[{cpus}]",
-        shuffle_partitions=max(2 * cpus, 8),  # matches scaling_bench.py
+        shuffle_partitions=max(2 * cpus, 8),
         extra_conf=extra,
     )
 
 
-def _pipeline_run(
-    spark, cpus: int, n_pages: int, reps: int = 2
-) -> "tuple[int, float, float | None]":
+def _pipeline_run(spark, n_pages: int, reps: int = 2) -> "tuple[int, float, float | None]":
     """Best-of-``reps`` timed pipeline runs, returning (n_docs, best_seconds,
     pairwise_f1) — f1 is None until the final rep computes it. The input is
     materialized and
@@ -118,15 +65,10 @@ def _pipeline_run(
     lets a rep read the previous rep's persisted stages."""
     from ai_data_matching_spark.cache import release_persisted
     from ai_data_matching_spark.pipeline import run_pipeline
-    from ai_data_matching_spark.synth import generate_pages
-
-    # input is a TABLE (the cli.py --input contract): corpus written once
-    # untimed as snappy parquet on tmpfs, every timed rep reads it — same
-    # methodology as scripts/scaling_bench.py (see BENCH/BASELINE.md).
-    # ensure_pages_table is the canonical cache recipe, shared by every
-    # benchmark harness.
     from ai_data_matching_spark.synth import ensure_pages_table
 
+    # input is a TABLE (the cli.py --input contract): corpus written once
+    # untimed as snappy parquet on tmpfs, every timed rep reads it
     raw = spark.read.parquet(ensure_pages_table(spark, n_pages, seed=42))
     _materialize(run_pipeline(spark, raw.limit(2000)).assigned)  # warm-up
     release_persisted()
@@ -159,16 +101,7 @@ def _pipeline_run(
     return n, best, f1
 
 
-def _incremental_section(
-    spark,
-    n_pages: int,
-    timings: dict,
-    extras: dict,
-    reps: int | None = None,
-    split_denom: int = 10,
-    key: str = "er_incremental",
-    probe_tag: str = "inc",
-) -> None:
+def _incremental_section(spark, n_pages: int, timings: dict, extras: dict) -> None:
     """Incremental ER: fold a ~10% batch into a committed base run.
 
     The base commit is the recompute ANCHOR (timed — it is the same
@@ -186,12 +119,11 @@ def _incremental_section(
     """
     if os.environ.get("BENCH_INCREMENTAL", "1") == "0":
         return
-    if reps is None:
-        # best-of-3 by default: the r04 artifacts measured the same code's
-        # anchor/fold ratio swinging 1.48-2.12× across host windows with
-        # reps=2 — one more same-window pair materially tightens the max
-        # statistic the section reports, for ~25 s extra (untimed) wall
-        reps = int(os.environ.get("BENCH_INC_REPS", "3"))
+    # best-of-3 by default: the r04 artifacts measured the same code's
+    # anchor/fold ratio swinging 1.48-2.12× across host windows with
+    # reps=2 — one more same-window pair materially tightens the max
+    # statistic the section reports, for ~25 s extra (untimed) wall
+    reps = int(os.environ.get("BENCH_INC_REPS", "3"))
     if reps <= 0:  # a non-positive rep count means "skip the section",
         return     # not "crash on round(None) after the anchor ran"
     import shutil
@@ -207,9 +139,8 @@ def _incremental_section(
 
     release_persisted()
     spark.catalog.clearCache()
-    extras.update(_probe_gate(probe_tag))  # incremental section window label
     all_pages = generate_pages(spark, n_pages, seed=42).drop("entity_id")
-    is_batch = F.pmod(F.xxhash64("url"), F.lit(split_denom)) == 0
+    is_batch = F.pmod(F.xxhash64("url"), F.lit(10)) == 0
     base = all_pages.filter(~is_batch).persist()
     n_base = base.count()
     batch = all_pages.filter(is_batch).persist()
@@ -263,14 +194,14 @@ def _incremental_section(
         spark.catalog.clearCache()
     base.unpersist()
     batch.unpersist()
-    timings[key] = round(best_dt, 3)
-    extras[f"{key}_batch_docs"] = n_batch
-    extras[f"{key}_docs_per_sec"] = round(n_batch / best_dt, 1)
-    extras[f"{key}_speedup_vs_recompute"] = round(best_ratio, 2)
-    extras[f"{key}_reps"] = reps
+    timings["er_incremental"] = round(best_dt, 3)
+    extras["er_incremental_batch_docs"] = n_batch
+    extras["er_incremental_docs_per_sec"] = round(n_batch / best_dt, 1)
+    extras["er_incremental_speedup_vs_recompute"] = round(best_ratio, 2)
+    extras["er_incremental_reps"] = reps
     # full disclosure: every rep's (fold_seconds, speedup) — so a lucky
     # best-of-N cannot masquerade as the typical ratio
-    extras[f"{key}_rep_pairs"] = rep_pairs
+    extras["er_incremental_rep_pairs"] = rep_pairs
 
 
 def main() -> None:
@@ -290,22 +221,25 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     extras: dict[str, float | int] = {}
-    extras.update(_probe_gate())
     want_pipeline = not only or "er_pipeline" in only.split(",")
 
     # -- headline: pipeline at both parallelism levels, best wins --------
-    best_level: tuple[int, int, float] | None = None  # (cpus, docs, secs)
+    levels = list(dict.fromkeys([pipe_cpus, cpus]))
     if want_pipeline:
-        for level in dict.fromkeys([pipe_cpus, cpus]):
-            extras.update(_probe_gate(f"pipe{level}"))  # per-leg window label
+        docs_per_sec: dict[int, float] = {}
+        for level in levels:
             spark = _build(level)
-            n, dt, f1 = _pipeline_run(spark, level, n_pages)
+            n, dt, f1 = _pipeline_run(spark, n_pages)
+            docs_per_sec[level] = n / dt
             extras[f"er_pipeline_at_{level}"] = round(dt, 3)
             extras[f"er_pipeline_docs_per_sec_at_{level}"] = round(n / dt, 1)
             if f1 is not None:
                 extras["er_pipeline_pairwise_f1"] = round(f1, 6)
-            if best_level is None or n / dt > best_level[1] / best_level[2]:
-                best_level = (level, n, dt)
+            if level == max(docs_per_sec, key=docs_per_sec.get):
+                timings["er_pipeline"] = round(dt, 3)
+                extras["er_pipeline_docs_per_sec"] = round(n / dt, 1)
+                extras["er_pipeline_docs"] = n
+                extras["er_pipeline_cpus"] = level
             if level == pipe_cpus:
                 # incremental section runs HERE, on the pipe_cpus session
                 # (one JVM = one SparkSession, so this is the only point a
@@ -313,33 +247,13 @@ def main() -> None:
                 # anchor (t_base) is measured on this same session, so the
                 # speedup ratio stays same-window, same-parallelism.
                 _incremental_section(spark, n_pages, timings, extras)
-                # r05: a second, production-shaped fold leg — 500k-page
-                # corpus at a 19:1 corpus:batch ratio, one anchor+fold
-                # pair — because the 100k/9:1 section above is provably
-                # floor-limited (≈ anchor/(fold floor + batch work); see
-                # BENCH/BASELINE.md round-5). The profiled ratio curve at
-                # 500k is 1.8× (9:1) → 2.0× (19:1) → 2.3× (39:1); this
-                # leg lands the ≥2× operating point in the driver-visible
-                # artifact with its own window label. Disable with
-                # BENCH_INC_RATIO_LEG=0.
-                if os.environ.get("BENCH_INC_RATIO_LEG", "1") != "0":
-                    _incremental_section(
-                        spark,
-                        500_000,
-                        timings,
-                        extras,
-                        reps=int(os.environ.get("BENCH_INC_RATIO_REPS", "2")),
-                        split_denom=20,
-                        key="er_inc_19to1_500k",
-                        probe_tag="inc500k",
-                    )
             if level != cpus:
                 spark.stop()
-        level, n, dt = best_level
-        timings["er_pipeline"] = round(dt, 3)
-        extras["er_pipeline_docs_per_sec"] = round(n / dt, 1)
-        extras["er_pipeline_docs"] = n
-        extras["er_pipeline_cpus"] = level
+        if len(levels) == 2:
+            lo, hi = sorted(levels)
+            extras["er_pipeline_scaling_efficiency"] = round(
+                docs_per_sec[hi] / docs_per_sec[lo] / (hi / lo), 3
+            )
 
     # -- operator queries at cpus (the loop above ends with a live
     #    session at `cpus`; only the no-pipeline path needs to build one)

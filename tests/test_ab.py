@@ -1,0 +1,95 @@
+"""scripts/ab.py: the pair verdict rule and worktree cleanup (no Spark)."""
+
+import os
+import subprocess
+import sys
+
+import pytest
+
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
+
+import ab  # noqa: E402
+
+WALL = {"name": "wall_s", "unit": "s", "better": "lower", "bound": 0.25}
+DOCS = {"name": "docs_per_s", "unit": "1/s", "better": "higher", "bound": 0.25}
+BASE = [10.0 + 0.1 * i for i in range(10)]  # median 10.45, IQR 0.45
+
+
+def test_nine_of_ten_wins_with_gap_over_iqr_is_gain():
+    change = [9.0] * 9 + [11.0]
+    s = ab.judge(WALL, BASE, change)
+    assert (s["wins"], s["losses"]) == (9, 1)
+    assert s["base_iqr"] == pytest.approx(0.45)
+    assert s["verdict"] == "gain"
+
+
+def test_eight_of_ten_wins_is_not_gain():
+    s = ab.judge(WALL, BASE, [9.0] * 8 + [11.0] * 2)
+    assert s["wins"] == 8
+    assert s["verdict"] == "neutral"
+
+
+def test_nine_wins_within_iqr_is_not_gain():
+    s = ab.judge(WALL, BASE, [b - 0.01 for b in BASE[:9]] + [11.0])
+    assert s["wins"] == 9
+    assert s["verdict"] == "neutral"
+
+
+def test_ties_count_for_neither_side():
+    s = ab.judge(WALL, BASE, list(BASE[:5]) + [b - 1 for b in BASE[5:]])
+    assert (s["wins"], s["losses"]) == (5, 0)
+    assert s["verdict"] == "neutral"
+
+
+def test_docs_per_s_is_higher_is_better():
+    s = ab.judge(DOCS, BASE, [12.0] * 10)
+    assert (s["wins"], s["losses"], s["verdict"]) == (10, 0, "gain")
+    s = ab.judge(DOCS, BASE, [7.0] * 10)
+    assert (s["wins"], s["losses"], s["verdict"]) == (0, 10, "worse")
+
+
+def test_wider_base_spread_than_bound_is_unresolved():
+    base = [10.0, 10.0, 14.0, 14.0, 6.0, 6.0]  # IQR 6 > 0.25 × median 10
+    assert ab.judge(WALL, base, [11.0] * 6)["verdict"] == "unresolved"
+    # ... unless every change run beats every base run
+    assert ab.judge(WALL, base, [1.0] * 6)["verdict"] == "gain"
+
+
+def test_bad_run_raises(tmp_path):
+    with pytest.raises(RuntimeError, match="exit 0"):
+        ab.run_once([sys.executable, "-c", "print('{\"failed\": 1, \"correct\": false}')"],
+                    str(tmp_path))
+    with pytest.raises(RuntimeError, match="exit 3"):
+        ab.run_once([sys.executable, "-c", "raise SystemExit(3)"], str(tmp_path))
+
+
+def _worktrees() -> str:
+    return subprocess.run(
+        ["git", "worktree", "list", "--porcelain"],
+        cwd=os.path.dirname(__file__), capture_output=True, text=True,
+    ).stdout
+
+
+def test_worktrees_removed_when_runner_raises():
+    inside = subprocess.run(
+        ["git", "rev-parse", "--is-inside-work-tree"],
+        cwd=os.path.dirname(__file__), capture_output=True, text=True,
+    )
+    if inside.stdout.strip() != "true":
+        pytest.skip("not inside a git work tree")
+    before = _worktrees()
+    seen = []
+
+    class Boom(Exception):
+        pass
+
+    def runner(cmd, cwd):
+        seen.append(cwd)
+        assert _worktrees().count("worktree ") == before.count("worktree ") + 2
+        assert os.path.isfile(os.path.join(cwd, "BENCHMARK.json"))
+        raise Boom
+
+    with pytest.raises(Boom):
+        ab.main(["HEAD", "HEAD", "--workload", "stream", "--pairs", "1"], runner=runner)
+    assert _worktrees() == before
+    assert seen and not os.path.exists(os.path.dirname(seen[0]))
