@@ -41,6 +41,11 @@ from ..functions.hashing import simhash_bands
 
 DEFAULT_MAX_BLOCK_SIZE = 64
 
+# The committed blocked stage's columns (plus norm_text_hash), in order:
+# the base pipeline's snapshot and the fold's deltas share this layout.
+BLOCKED_COLS = ["url", "warc_ts", "lang", "norm_domain", "norm_text",
+                "simhash", "minhash_sig", "block_keys"]
+
 
 def latest_crawl_wins(df: DataFrame, url_col: str = "url") -> DataFrame:
     """One row per url — the latest crawl, picked deterministically.
@@ -130,7 +135,7 @@ def with_extract_sketch_keys(
     return out.withColumn("block_keys", block_keys)
 
 
-def exact_match_edges(blocked: DataFrame, url_col: str = "url") -> DataFrame:
+def exact_match_edges(blocked: DataFrame) -> DataFrame:
     """Exact phase: identical (norm_domain, simhash) ⇒ same entity.
 
     Returns star edges ``(src, dst, score=1.0, match_type='exact')`` where
@@ -138,7 +143,7 @@ def exact_match_edges(blocked: DataFrame, url_col: str = "url") -> DataFrame:
     """
     grp = (
         blocked.groupBy("norm_domain", "simhash")
-        .agg(F.min(url_col).alias("_rep"), F.count("*").alias("_n"))
+        .agg(F.min("url").alias("_rep"), F.count("*").alias("_n"))
         .filter(F.col("_n") > 1)
         .select(F.col("norm_domain").alias("_gd"), F.col("simhash").alias("_gs"), "_rep")
     )
@@ -149,7 +154,7 @@ def exact_match_edges(blocked: DataFrame, url_col: str = "url") -> DataFrame:
     # groupBy treats null as a key, so the join-back must too, or those
     # groups silently lose their edges.
     return (
-        blocked.select("norm_domain", "simhash", F.col(url_col).alias("src"))
+        blocked.select("norm_domain", "simhash", F.col("url").alias("src"))
         .join(
             grp,
             F.col("norm_domain").eqNullSafe(F.col("_gd"))
@@ -183,8 +188,6 @@ DEFAULT_MAX_BAND_HAMMING = 16
 
 def candidate_pairs(
     blocked: DataFrame,
-    url_col: str = "url",
-    text_col: str = "norm_text",
     max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
     max_band_hamming: int = DEFAULT_MAX_BAND_HAMMING,
 ) -> tuple[DataFrame, DataFrame]:
@@ -212,7 +215,7 @@ def candidate_pairs(
     # hash: P ≈ n²/2⁶⁴, ~0.03 expected pairs at 10¹² docs) drops that one
     # candidate pair — bounded recall loss, never a wrong edge.
     sel = blocked.select(
-        F.xxhash64(F.col(url_col)).alias("uid"),
+        F.xxhash64(F.col("url")).alias("uid"),
         F.col("simhash"),
         F.explode("block_keys").alias("block_key"),
     )
@@ -245,24 +248,33 @@ def candidate_pairs(
         .filter(ham_ok)
         .select("uid_a", "uid_b")
     )
-    # scoring reads at most MAX_SCORE_CHARS of each text (similarity._prep
-    # slices before the DP), so the payload join ships only that prefix —
-    # identical scores, and the attach shuffle carries a bounded
-    # ~0.5 KB/side instead of the full page text.
+    return _attach_payload(blocked, slim), hot
+
+
+def _attach_payload(blocked: DataFrame, slim: DataFrame) -> DataFrame:
+    """Melt-attach: the ``(uid_a, uid_b)`` pairs ``slim`` (uid =
+    xxhash64(url), possibly repeated across block keys) → deduplicated
+    ``(url_a, url_b, text_a, text_b, sig_a, sig_b)`` with url_a < url_b,
+    payload drawn from ``blocked``. Shared by ``candidate_pairs`` and the
+    fold's ``incremental_candidate_pairs``.
+
+    Each pair melts into (pair, side, uid) rows so ONE corpus scan feeds
+    both endpoints through a single equi-join (AQE broadcasts the O(pairs)
+    melted side when it is small), and ONE groupBy on the pair key
+    performs the cross-key dedup and the a/b pivot together — instead of
+    a dropDuplicates shuffle + two payload joins (two corpus scans, the
+    second join's probe side too wide for a broadcast). Duplicate
+    (multi-key) pairs collapse in the agg: max over identical structs.
+    Scoring reads at most MAX_SCORE_CHARS of each text (similarity._prep
+    slices before the DP), so the payload ships only that prefix —
+    identical scores, and the attach shuffle carries a bounded ~0.5 KB
+    per side instead of the full page text."""
     from ..functions.similarity import MAX_SCORE_CHARS
 
-    # Melt-attach (r05, shared shape with incremental_candidate_pairs):
-    # each pair melts into (pair, side, uid) rows so ONE corpus scan
-    # feeds both endpoints through a single equi-join, and ONE groupBy on
-    # the pair key performs the cross-key dedup and the a/b pivot
-    # together — replacing the previous dropDuplicates shuffle + two
-    # payload joins (two corpus scans, the second join's probe side too
-    # wide for a broadcast). Duplicate (multi-key) pairs collapse in the
-    # agg: max over identical structs.
     payload = blocked.select(
-        F.xxhash64(F.col(url_col)).alias("uid"),
-        F.col(url_col).alias("url"),
-        F.substring(F.col(text_col), 1, MAX_SCORE_CHARS).alias("norm_text"),
+        F.xxhash64(F.col("url")).alias("uid"),
+        F.col("url"),
+        F.substring(F.col("norm_text"), 1, MAX_SCORE_CHARS).alias("norm_text"),
         F.col("minhash_sig"),
     )
     sides = slim.select(
@@ -288,7 +300,7 @@ def candidate_pairs(
     # downstream tiebreak) is identical to the string-keyed formulation
     flip = F.col("_pa.url") > F.col("_pb.url")
     pick = lambda a_c, b_c: F.when(flip, b_c).otherwise(a_c)  # noqa: E731
-    pairs = pairs0.select(
+    return pairs0.select(
         pick(F.col("_pa.url"), F.col("_pb.url")).alias("url_a"),
         pick(F.col("_pb.url"), F.col("_pa.url")).alias("url_b"),
         pick(F.col("_pa.norm_text"), F.col("_pb.norm_text")).alias("text_a"),
@@ -296,7 +308,6 @@ def candidate_pairs(
         pick(F.col("_pa.minhash_sig"), F.col("_pb.minhash_sig")).alias("sig_a"),
         pick(F.col("_pb.minhash_sig"), F.col("_pa.minhash_sig")).alias("sig_b"),
     )
-    return pairs, hot
 
 
 def route_unmatched(pairs: DataFrame, exact_edges: DataFrame) -> DataFrame:

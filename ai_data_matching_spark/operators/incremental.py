@@ -62,17 +62,23 @@ from ..cache import persist_tracked
 from ..pipeline import PipelineConfig, PipelineResult
 from ..sources.tables import TableIO, config_fingerprint, metric_part
 from .blocking import (
+    BLOCKED_COLS,
+    DEFAULT_MAX_BAND_HAMMING,
+    DEFAULT_MAX_BLOCK_SIZE,
+    _attach_payload,
+    exact_match_edges,
     hot_keys,
     latest_crawl_wins,
     route_unmatched,
     with_extract_sketch_keys,
 )
-from .clustering import cluster_assignments, connected_components
+from .clustering import (
+    DEFAULT_SMALL_GRAPH_EDGES,
+    cluster_assignments,
+    connected_components,
+)
 from .consolidate import consolidate_clusters, match_statistics
 from .scoring import fuzzy_match_edges, score_pairs, union_edges
-
-BLOCKED_COLS = ["url", "warc_ts", "lang", "norm_domain", "norm_text",
-                "simhash", "minhash_sig", "block_keys"]
 
 
 def exact_match_edges_touched(blocked_union: DataFrame, new_flag: str = "_is_new") -> DataFrame:
@@ -97,7 +103,8 @@ def exact_match_edges_touched(blocked_union: DataFrame, new_flag: str = "_is_new
         .dropDuplicates(["_gd", "_gs"])
     )
     # persisted: touched feeds both the group aggregate and the star
-    # join-back below (one action, two DAG branches — no subtree sharing)
+    # join-back of exact_match_edges (one action, two DAG branches — no
+    # subtree sharing)
     touched = persist_tracked(
         blocked_union.select("norm_domain", "simhash", "url").join(
             F.broadcast(batch_keys),
@@ -106,27 +113,7 @@ def exact_match_edges_touched(blocked_union: DataFrame, new_flag: str = "_is_new
         )
         .select("norm_domain", "simhash", "url")
     )
-    grp = (
-        touched.groupBy("norm_domain", "simhash")
-        .agg(F.min("url").alias("_rep"), F.count("*").alias("_n"))
-        .filter(F.col("_n") > 1)
-        .select(F.col("norm_domain").alias("_gd"), F.col("simhash").alias("_gs"), "_rep")
-    )
-    return (
-        touched.select("norm_domain", "simhash", F.col("url").alias("src"))
-        .join(
-            grp,
-            F.col("norm_domain").eqNullSafe(F.col("_gd"))
-            & F.col("simhash").eqNullSafe(F.col("_gs")),
-        )
-        .filter(F.col("src") != F.col("_rep"))
-        .select(
-            "src",
-            F.col("_rep").alias("dst"),
-            F.lit(1.0).alias("score"),
-            F.lit("exact").alias("match_type"),
-        )
-    )
+    return exact_match_edges(touched)
 
 
 def _label_delta_driver(
@@ -224,7 +211,6 @@ def incremental_label_delta(
     prior_labels: DataFrame,
     new_edges: DataFrame,
     n_new_edges: int | None = None,
-    driver_edge_limit: int | None = None,
 ) -> tuple[DataFrame, int]:
     """The label DELTA the new edges induce on the prior clustering —
     exactly the rows a full recompute would label differently, plus the
@@ -274,11 +260,7 @@ def incremental_label_delta(
     distributed shape below is the scale path (and the fallback when
     the count is unknown); tests pin both paths equal.
     """
-    if driver_edge_limit is None:
-        from .clustering import DEFAULT_SMALL_GRAPH_EDGES as _gate
-
-        driver_edge_limit = _gate
-    if n_new_edges is not None and 0 <= n_new_edges <= driver_edge_limit:
+    if n_new_edges is not None and 0 <= n_new_edges <= DEFAULT_SMALL_GRAPH_EDGES:
         return _label_delta_driver(prior_labels, new_edges), 0
     e = new_edges.select("src", "dst")
     ends = (
@@ -349,8 +331,8 @@ def incremental_components(
 def incremental_candidate_pairs(
     blocked_union: DataFrame,
     new_flag: str = "_is_new",
-    max_block_size: int = 64,
-    max_band_hamming: int = 16,
+    max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
+    max_band_hamming: int = DEFAULT_MAX_BAND_HAMMING,
 ) -> tuple[DataFrame, DataFrame]:
     """New-touching candidate pairs: (new × all) minus old-old.
 
@@ -401,7 +383,7 @@ def incremental_candidate_pairs(
     )
     # orient by least/greatest (the asymmetric join yields new-old pairs
     # in one order and new-new pairs in both); cross-key dedup happens in
-    # the attach groupBy below — one shuffle for dedup AND attach
+    # the attach groupBy — one shuffle for dedup AND attach
     slim = (
         a.join(b, "block_key")
         .filter(F.col("uid_a") != F.col("uid_b"))
@@ -411,55 +393,9 @@ def incremental_candidate_pairs(
             F.greatest("uid_a", "uid_b").alias("uid_b"),
         )
     )
-    from ..functions.similarity import MAX_SCORE_CHARS
-
-    # Melt-attach (r05): the previous shape was dropDuplicates (shuffle 1)
-    # + two payload equi-joins — two column-pruned history scans, with the
-    # second join's probe side too wide for AQE to broadcast (shuffle 2).
-    # Melting each pair into (pair, side, uid) rows lets ONE history scan
-    # feed both endpoints through a single equi-join (AQE broadcasts the
-    # O(pairs) melted side at fold scale; at extreme batch sizes it
-    # degrades to the same shuffle join as before, never worse), and ONE
-    # groupBy on the oriented pair key performs the cross-key dedup and
-    # the a/b pivot together. Net: one O(history) scan and one O(pairs)
-    # shuffle replace two scans and two shuffles per fold. Duplicate
-    # (multi-key) pairs collapse in the agg — max over identical structs.
-    payload = blocked_union.select(
-        F.xxhash64(F.col("url")).alias("uid"),
-        F.col("url"),
-        F.substring(F.col("norm_text"), 1, MAX_SCORE_CHARS).alias("norm_text"),
-        F.col("minhash_sig"),
-    )
-    sides = slim.select(
-        "uid_a",
-        "uid_b",
-        F.explode(
-            F.array(
-                F.struct(F.col("uid_a").alias("uid"), F.lit(0).alias("side")),
-                F.struct(F.col("uid_b").alias("uid"), F.lit(1).alias("side")),
-            )
-        ).alias("_s"),
-    ).select("uid_a", "uid_b", F.col("_s.uid").alias("uid"), F.col("_s.side").alias("side"))
-    pay = F.struct(F.col("url"), F.col("norm_text"), F.col("minhash_sig"))
-    pairs0 = (
-        payload.join(sides, "uid")
-        .groupBy("uid_a", "uid_b")
-        .agg(
-            F.max(F.when(F.col("side") == 0, pay)).alias("_pa"),
-            F.max(F.when(F.col("side") == 1, pay)).alias("_pb"),
-        )
-    )
-    flip = F.col("_pa.url") > F.col("_pb.url")
-    pick = lambda a_c, b_c: F.when(flip, b_c).otherwise(a_c)  # noqa: E731
-    pairs = pairs0.select(
-        pick(F.col("_pa.url"), F.col("_pb.url")).alias("url_a"),
-        pick(F.col("_pb.url"), F.col("_pa.url")).alias("url_b"),
-        pick(F.col("_pa.norm_text"), F.col("_pb.norm_text")).alias("text_a"),
-        pick(F.col("_pb.norm_text"), F.col("_pa.norm_text")).alias("text_b"),
-        pick(F.col("_pa.minhash_sig"), F.col("_pb.minhash_sig")).alias("sig_a"),
-        pick(F.col("_pb.minhash_sig"), F.col("_pa.minhash_sig")).alias("sig_b"),
-    )
-    return pairs, hot
+    # cross-key dedup and payload attach: one O(history) scan and one
+    # O(pairs) shuffle (blocking._attach_payload)
+    return _attach_payload(blocked_union, slim), hot
 
 
 class FoldCommit(NamedTuple):
@@ -582,29 +518,13 @@ def fold_incremental(
     # metric write at the end of the fold).
     rest = [c for c in BLOCKED_COLS if c != "url"]
 
-    def _with_content_hash(df: DataFrame) -> DataFrame:
-        """Ensure the committed content hash column exists. The base
-        pipeline commits ``norm_text_hash = xxhash64(norm_text)`` into the
-        blocked snapshot so the fold's classify join below compares
-        fixed-width columns ONLY — without the committed column, every
-        fold re-reads and re-hashes the whole history's norm_text (the
-        one wide column) just to test "did this url's content change?".
-        Chains committed by pre-hash code fall back to hashing on read —
-        same function, same input, so classification is identical."""
-        if "norm_text_hash" in df.columns:
-            return df
-        return df.withColumn("norm_text_hash", F.xxhash64("norm_text"))
-
     def _blocked_delta() -> DataFrame:
-        prior_blocked = _with_content_hash(_prior("blocked"))
-        # the docstring admits (url, warc_ts, html) without text/lang;
-        # fill the optional columns with typed nulls so the BLOCKED_COLS
-        # projection below resolves (same shape the schema-drift fill in
-        # read_state uses)
+        prior_blocked = _prior("blocked")
+        # the docstring admits (url, warc_ts, html) without text/lang; a
+        # typed-null lang lets the BLOCKED_COLS projection below resolve
         batch_src = new_pages
-        for _c in ("text", "lang"):
-            if _c not in batch_src.columns:
-                batch_src = batch_src.withColumn(_c, F.lit(None).cast("string"))
+        if "lang" not in batch_src.columns:
+            batch_src = batch_src.withColumn("lang", F.lit(None).cast("string"))
         batch = with_extract_sketch_keys(
             batch_src,
             n_simhash_bands=cfg.n_simhash_bands,
@@ -707,27 +627,15 @@ def fold_incremental(
         gc-compacted head may have expired)."""
         # refresh rows replace their prior row too (newer warc_ts, same
         # content) — they must join the supersede set or the view holds
-        # two rows per refreshed url. Pre-status resumed chains (delta
-        # committed by a code revision without _batch_status) carry no
-        # status column — there every kept row was new/changed, so the
-        # whole url set supersedes (same guard as the ingest metric and
-        # _edges_delta below).
-        has_status = "_batch_status" in kept.columns
-        kept_status = (
-            kept
-            if has_status
-            else kept.withColumn("_batch_status", F.lit(None).cast("string"))
-        )
-        changed_urls = (
-            kept.filter(F.col("_batch_status").isin("changed", "refresh"))
-            if has_status
-            else kept
+        # two rows per refreshed url
+        changed_urls = kept.filter(
+            F.col("_batch_status").isin("changed", "refresh")
         ).select("url")
-        # norm_text_hash rides along (compat-filled on pre-hash chains) so
-        # a compaction batch bakes it into the full snapshot; the edge
-        # consumers below never select it — column pruning drops it
+        # norm_text_hash rides along so a compaction batch bakes it into
+        # the full snapshot; the edge consumers below never select it —
+        # column pruning drops it
         prior_keep = (
-            _with_content_hash(_prior("blocked"))
+            _prior("blocked")
             .select(*BLOCKED_COLS, "norm_text_hash")
             .join(changed_urls, "url", "left_anti")
         )
@@ -740,12 +648,7 @@ def fold_incremental(
                 # prior edge stays valid, so they must NOT re-enter the
                 # edge stages as new rows (that would rescore their whole
                 # block for a timestamp bump)
-                _with_content_hash(kept_status).withColumn(
-                    "_is_new",
-                    F.coalesce(
-                        F.col("_batch_status") != F.lit("refresh"), F.lit(True)
-                    ),
-                )
+                kept.withColumn("_is_new", F.col("_batch_status") != F.lit("refresh"))
             )
         )
 
@@ -764,16 +667,10 @@ def fold_incremental(
         # execute a SECOND time inside this stage's commit (the committed
         # parquet and the view hold identical rows by construction). The
         # _is_new flag is reconstructed from the O(batch) kept delta;
-        # refresh rows stay False, same as the view. Pre-status resumed
-        # chains have no _batch_status column — there every kept row was
-        # new/changed, so the unfiltered url set is the same flag.
+        # refresh rows stay False, same as the view.
         full_rec = io.last_committed("blocked", fp)
         if full_rec is not None:
-            rescored = (
-                kept.filter(F.col("_batch_status") != F.lit("refresh"))
-                if "_batch_status" in kept.columns
-                else kept
-            )
+            rescored = kept.filter(F.col("_batch_status") != F.lit("refresh"))
             blocked = (
                 io.read_snapshot(spark, full_rec)
                 .join(
@@ -860,13 +757,15 @@ def fold_incremental(
     # from committed deltas (and the batch's own url set), so a resumed
     # or replayed fold rewrites the same frame. Ingest: new / changed /
     # refresh counts plus the distinct batch-url total (dropped replays
-    # and stale crawls = the rest), skipped for a blocked delta committed
-    # by pre-status code. Edge counts: one global aggregate unpivoted, so
-    # both match types always get a row, 0 when the fold emitted none.
+    # and stale crawls = the rest). Edge counts: one global aggregate
+    # unpivoted, so both match types always get a row, 0 when the fold
+    # emitted none.
     from .scoring import score_histogram
 
     n = F.count("*").alias("n")
     by_type = [F.count(F.when(F.col("match_type") == m, 1)).alias(m) for m in ("exact", "fuzzy")]
+    by_status = kept.groupBy("_batch_status").agg(n)
+    urls = new_pages.select("url").distinct().agg(n)
     parts = [
         metric_part(
             "edge_counts",
@@ -880,14 +779,9 @@ def fold_incremental(
             F.col("n_pairs"),
             score_histogram(edge_delta),
         ),
+        metric_part("batch_ingest", F.col("_batch_status"), F.col("n"), by_status),
+        metric_part("batch_ingest", F.lit("batch_urls"), F.col("n"), urls),
     ]
-    if "_batch_status" in kept.columns:
-        by_status = kept.groupBy("_batch_status").agg(n)
-        urls = new_pages.select("url").distinct().agg(n)
-        parts += [
-            metric_part("batch_ingest", F.col("_batch_status"), F.col("n"), by_status),
-            metric_part("batch_ingest", F.lit("batch_urls"), F.col("n"), urls),
-        ]
     io.write_metrics(batch_id, "final", parts)
 
     return FoldCommit(fp, resumed, cc_iters)

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .extract import FUZZY_THRESHOLD
 from .operators.blocking import (
+    BLOCKED_COLS,
     DEFAULT_MAX_BAND_HAMMING,
     DEFAULT_MAX_BLOCK_SIZE,
     candidate_pairs,
@@ -39,13 +40,6 @@ class PipelineConfig:
     n_simhash_bands: int = 4
     minhash_k: int = 16
     best_match_only: bool = True
-    # Common-Crawl-style inputs carry multiple crawls per url; the
-    # engine's unit of resolution is the URL, latest crawl wins (the
-    # incremental fold's state is url-keyed by the same rule, so batch
-    # and fold agree on any corpus). Disable ONLY for inputs whose
-    # catalog already guarantees url-uniqueness — it skips one groupBy
-    # shuffle of the slim blocked frame.
-    dedup_recrawls: bool = True
 
 
 @dataclass
@@ -102,18 +96,13 @@ def run_pipeline(
             resumed.append(name)
         return df
 
-    def _dedup(df: DataFrame) -> DataFrame:
-        """Resolve re-crawls: the blocked frame (and with io, its
-        committed snapshot — the state an incremental fold chains on) is
-        url-unique by contract, latest crawl wins. Same deterministic
-        rule as the fold's within-batch dedup (blocking.latest_crawl_wins),
-        so corpus-at-once and batched ingestion pick identical survivors."""
-        return latest_crawl_wins(df) if cfg.dedup_recrawls else df
-
     # stages 1+2 — ONE fused kernel (with_extract_sketch_keys): extract +
     # normalize + sketch + blocking keys in a single Arrow round trip. The
     # heavy html binary AND the upstream text copy are dropped at the
     # head: extracted_text is the engine's canonical text from here on.
+    # Re-crawls resolve to one row per url, latest crawl wins
+    # (blocking.latest_crawl_wins — the fold's within-batch rule too, so
+    # corpus-at-once and batched ingestion pick identical survivors).
     def _extract_sketch(**knobs) -> DataFrame:
         return with_extract_sketch_keys(
             pages,
@@ -135,7 +124,7 @@ def run_pipeline(
 
         blocked = stage(
             "blocked",
-            lambda: _dedup(
+            lambda: latest_crawl_wins(
                 _extract_sketch(emit_extracted=False, text_prefix=MAX_SCORE_CHARS)
             ),
         )
@@ -148,31 +137,20 @@ def run_pipeline(
         extracted = stage("extract", _extract_sketch)
 
         def _blocked() -> DataFrame:
-            # an extract snapshot committed by older code (staged
-            # extract → sketch chain) carries no sketches; committing a
-            # blocked snapshot from it would make every rerun resume a
-            # sketchless state, so refuse before anything is written
-            sketch_cols = ("simhash", "minhash_sig", "block_keys")
-            missing = [c for c in sketch_cols if c not in extracted.columns]
-            if missing:
-                raise ValueError(
-                    f"committed 'extract' snapshot lacks {missing}: it was "
-                    "written by an older stage-1 layout; drop that snapshot "
-                    "(or use a fresh table root) and rerun"
-                )
-            # extracted_text is not carried into the blocked snapshot:
-            # every consumer (exact groups, pair generation, payload
-            # attach) reads only (url, norm_domain, norm_text, sketches).
-            # norm_text_hash is committed alongside so an incremental fold
-            # can classify re-crawled urls (content changed vs replay) by
+            # the blocked snapshot has one fixed layout whatever columns
+            # the input pages carry: BLOCKED_COLS (extracted_text dropped —
+            # every consumer reads only url, norm_domain, norm_text and the
+            # sketches) plus norm_text_hash, so an incremental fold can
+            # classify re-crawled urls (content changed vs replay) by
             # comparing fixed-width columns only — without it every fold
             # re-reads and re-hashes the whole history's norm_text, the
             # one wide column, just to answer "did this url's content
-            # change?"
-            return _dedup(
-                extracted.drop("extracted_text").withColumn(
+            # change?". The fold's blocked deltas carry the same columns
+            # (plus their _batch_status).
+            return latest_crawl_wins(
+                extracted.withColumn(
                     "norm_text_hash", F.xxhash64("norm_text")
-                )
+                ).select(*BLOCKED_COLS, "norm_text_hash")
             )
 
         blocked = stage("blocked", _blocked)

@@ -26,8 +26,13 @@ snapshot with that schema given (``spark.read.schema(...)``), so a read
 is a plan and launches no Spark job; inferring it from the data files
 costs one job per read, and a merge-on-read chain walk reads every hop.
 This is the Iceberg contract, where the schema lives in table metadata,
-never in the data files. A record committed before the field existed
-has no ``schema`` and falls back to the inferring read.
+never in the data files.
+
+Each record also carries ``layout``, the ``SNAPSHOT_LAYOUT`` of the code
+that committed it. ``TableIO.read_snapshot`` — the one read behind every
+resume, chain walk and compaction — refuses a record from another layout
+instead of patching columns inside the operators: state committed by
+older code is rebuilt from a fresh table root, never migrated.
 
 Metrics (base pipeline and fold alike) are long ``(run_id, stage,
 metric, key, value)`` frames at ``_metrics/<stage>/<run_id>``; see
@@ -63,17 +68,10 @@ def config_fingerprint(payload: dict) -> str:
     return hashlib.sha256(json.dumps(payload, sort_keys=True).encode()).hexdigest()[:16]
 
 
-# Derived columns recomputable from their committed source when an
-# old-revision delta in a chain lacks them (read_state merge-on-read
-# schema drift). Each entry must mirror the committing code's definition
-# exactly — operators/incremental.py commits norm_text_hash =
-# xxhash64(norm_text) with every blocked delta, so recomputing it here
-# classifies re-crawls identically to a chain committed by current code
-# (a typed-null fill would instead make every prior row read as
-# "content changed").
-_SCHEMA_DRIFT_FILL = {
-    ("blocked", "norm_text_hash"): lambda: F.xxhash64("norm_text"),
-}
+# The column layout of committed stages. Bump this whenever a committed
+# stage's columns change: snapshots stamped with another value are refused
+# on read (TableIO.read_snapshot).
+SNAPSHOT_LAYOUT = 1
 
 
 def merge_edge_sets(edges: DataFrame) -> DataFrame:
@@ -185,10 +183,8 @@ class ParquetSnapshotBackend:
         pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
     def read_snapshot(self, spark: SparkSession, rec: dict) -> DataFrame:
-        reader = spark.read
-        if "schema" in rec:
-            reader = reader.schema(StructType.fromJson(json.loads(rec["schema"])))
-        return reader.parquet(rec["path"])
+        schema = StructType.fromJson(json.loads(rec["schema"]))
+        return spark.read.schema(schema).parquet(rec["path"])
 
     def drop_snapshot(self, rec: dict, spark: SparkSession | None = None) -> None:
         import shutil
@@ -380,6 +376,7 @@ class TableIO:
                 "row_count": row_count,
                 "n_partitions": n_parts,
                 "committed_at": time.time(),
+                "layout": SNAPSHOT_LAYOUT,
                 **locator,
                 **(extra or {}),
             }
@@ -387,6 +384,15 @@ class TableIO:
         return committed
 
     def read_snapshot(self, spark: SparkSession, rec: dict) -> DataFrame:
+        """Read a committed snapshot; raises for a record committed under
+        another ``SNAPSHOT_LAYOUT`` (older code) — its columns are not the
+        ones the stages read."""
+        if rec.get("layout") != SNAPSHOT_LAYOUT:
+            raise ValueError(
+                f"snapshot {rec['stage']} at {rec['fingerprint']} has layout "
+                f"{rec.get('layout')}, this code reads layout {SNAPSHOT_LAYOUT}: "
+                "use a fresh table root or re-run the base pipeline"
+            )
         return self.backend.read_snapshot(spark, rec)
 
     # -- state views (delta chains / merge-on-read) --------------------------
@@ -484,18 +490,7 @@ class TableIO:
                 "ancestry?) — compact before expiring, or re-run the base "
                 "pipeline"
             )
-        # Schema drift across code revisions: a delta committed by an
-        # older revision may lack columns the prior (newer) state carries.
-        # Fill them — derived columns are recomputed from their source
-        # (exact: same function, same input), anything else becomes a
-        # typed null. Delta-only bookkeeping columns (_batch_status) are
-        # dropped by the select, as before.
-        for fld in prior.schema.fields:
-            if fld.name not in df.columns:
-                fill = _SCHEMA_DRIFT_FILL.get((stage, fld.name))
-                df = df.withColumn(
-                    fld.name, fill() if fill else F.lit(None).cast(fld.dataType)
-                )
+        # delta-only bookkeeping columns (_batch_status) drop out here
         delta = df.select(*prior.columns)
         if stage == "edges":
             return prior.unionByName(delta)
@@ -513,16 +508,14 @@ class TableIO:
         stage: str,
         fingerprint: str,
         compute,
-        force: bool = False,
         extra: dict | None = None,
     ) -> tuple[DataFrame, bool]:
         """Resume probe: return (df, was_resumed). ``compute`` is a thunk
         producing the stage DataFrame; it is only invoked when no committed
         snapshot matches (stage, fingerprint)."""
-        if not force:
-            rec = self.last_committed(stage, fingerprint)
-            if rec is not None:
-                return self.read_snapshot(spark, rec), True
+        rec = self.last_committed(stage, fingerprint)
+        if rec is not None:
+            return self.read_snapshot(spark, rec), True
         return self.commit(compute(), stage, fingerprint, extra=extra), False
 
     def write_metrics(self, run_id: str, stage: str, parts: list[DataFrame]) -> None:

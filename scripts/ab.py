@@ -10,7 +10,10 @@ included) is the change side. The command and ``run_seconds`` come from
 a time, each with its own checkout as cwd; pair i runs seed S+i on both
 sides, and the side that runs first alternates between pairs. Use an even
 N so an order effect (on a shared host the second run of a pair is often
-the faster) falls on both sides alike.
+the faster) falls on both sides alike. Before pair 1 each side runs once
+untimed (printed as ``warm-up``, left out of every summary), so the
+bytecode compilation and cold caches of a fresh checkout's first run
+land on neither side's numbers.
 
 Per end-to-end metric it prints every run, both medians, the base IQR,
 wins out of N (ties count for neither side) and a verdict: ``unresolved``
@@ -118,22 +121,32 @@ def main(argv=None, runner=run_once) -> int:
             print("ab: BENCHMARK.json differs between the two sides", file=sys.stderr)
             return 2
         spec = json.loads(specs[0])
+
+        def run(label: str, side: str, seed: int) -> dict | None:
+            cmd = spec["command"] + [
+                "--workload", args.workload, "--seed", str(seed),
+                "--seconds", str(spec["run_seconds"]),
+            ]
+            try:
+                v = runner(cmd, sides[side])
+            except RuntimeError as e:
+                print(f"{label} {side}: {e}", file=sys.stderr)
+                return None
+            shown = " ".join(f"{m['name']}={v[m['name']]:.4g}" for m in spec["end_to_end"])
+            print(f"{label} seed {seed} {side:6} {shown}", flush=True)
+            return v
+
+        for side in ("base", "change"):
+            if run("warm-up", side, args.seed) is None:
+                return 1
         values: dict[str, list[dict]] = {"base": [], "change": []}
         for i in range(args.pairs):
             order = ("base", "change") if i % 2 == 0 else ("change", "base")
             for side in order:
-                cmd = spec["command"] + [
-                    "--workload", args.workload, "--seed", str(args.seed + i),
-                    "--seconds", str(spec["run_seconds"]),
-                ]
-                try:
-                    v = runner(cmd, sides[side])
-                except RuntimeError as e:
-                    print(f"pair {i + 1} {side}: {e}", file=sys.stderr)
+                v = run(f"pair {i + 1}", side, args.seed + i)
+                if v is None:
                     return 1
                 values[side].append(v)
-                shown = " ".join(f"{m['name']}={v[m['name']]:.4g}" for m in spec["end_to_end"])
-                print(f"pair {i + 1} seed {args.seed + i} {side:6} {shown}", flush=True)
         print(f"\n{args.workload}: {args.pairs} pairs, base {args.base_ref}, "
               f"change {args.change_ref or 'working tree'}")
         for m in spec["end_to_end"]:

@@ -70,13 +70,17 @@ def _worktrees() -> str:
     ).stdout
 
 
-def test_worktrees_removed_when_runner_raises():
+def _skip_outside_git_work_tree():
     inside = subprocess.run(
         ["git", "rev-parse", "--is-inside-work-tree"],
         cwd=os.path.dirname(__file__), capture_output=True, text=True,
     )
     if inside.stdout.strip() != "true":
         pytest.skip("not inside a git work tree")
+
+
+def test_worktrees_removed_when_runner_raises():
+    _skip_outside_git_work_tree()
     before = _worktrees()
     seen = []
 
@@ -93,3 +97,22 @@ def test_worktrees_removed_when_runner_raises():
         ab.main(["HEAD", "HEAD", "--workload", "stream", "--pairs", "1"], runner=runner)
     assert _worktrees() == before
     assert seen and not os.path.exists(os.path.dirname(seen[0]))
+
+
+def test_warm_up_runs_reach_no_summary(capsys):
+    """One untimed run per side comes before pair 1; its values are
+    printed as ``warm-up`` and left out of every median, IQR and count."""
+    _skip_outside_git_work_tree()
+    calls = []
+
+    def runner(cmd, cwd):
+        calls.append(cwd)
+        v = 1000.0 if len(calls) <= 2 else 10.0
+        return {"wall_s": v, "docs_per_s": v, "setup_s": v, "latency_p50_s": v}
+
+    assert ab.main(["HEAD", "--workload", "batch", "--pairs", "2"], runner=runner) == 0
+    out = capsys.readouterr().out
+    assert len(calls) == 6 and calls[0] != calls[1]
+    assert [line.split()[0] for line in out.splitlines()[:2]] == ["warm-up"] * 2
+    assert "1000" not in out.split("\n\n", 1)[1]
+    assert out.count("median 10 -> 10") == 4

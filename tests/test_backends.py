@@ -4,7 +4,6 @@ the Iceberg adapter's ident/DDL plumbing is correct without needing the
 runtime jar, and age-based metric retention prunes without breaking
 resume."""
 
-import json
 import os
 import time
 
@@ -261,21 +260,3 @@ def test_read_state_chain_launches_no_spark_job(spark, tmp_path):
     assert {(r["url"], r["component"]) for r in views["labels"].collect()} == {
         ("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d"),
     }
-
-
-def test_read_state_without_recorded_schema(spark, tmp_path):
-    """A manifest written before records carried ``schema`` still reads:
-    the parquet backend falls back to inferring it, with the same rows
-    and schema as the schema-given read."""
-    io = TableIO(str(tmp_path / "snaps"))
-    _depth2_chain(spark, io)
-    want = {s: io.read_state(spark, s, "fp2") for s in ("labels", "edges")}
-    records = io._read_manifest()
-    for rec in records:
-        rec.pop("schema")
-    with open(io._manifest_path, "w") as f:
-        json.dump(records, f)
-    for stage, view in want.items():
-        legacy = io.read_state(spark, stage, "fp2")
-        assert legacy.schema == view.schema, stage
-        assert sorted(legacy.collect()) == sorted(view.collect()), stage

@@ -503,48 +503,25 @@ def test_blocked_delta_plan_never_shuffles_history(spark, pages_small, tmp_path)
     assert "BroadcastHashJoin LeftSemi" in plan, plan
 
 
-def test_resume_pre_status_blocked_delta(spark, pages_small, tmp_path):
-    """A blocked_delta committed by an older code revision — no
-    ``_batch_status`` and no ``norm_text_hash`` column — must still
-    resume: the edge stage rebuilds the blocked view treating every kept
-    row as new/changed (the only semantics that revision had) and the
-    fold completes with the same clustering. Guards the compat fallbacks
-    in _blocked_view / _edges_delta / the ingest metric."""
-    from dataclasses import asdict
+def test_extra_input_columns_stay_out_of_blocked_state(spark, pages_small, tmp_path):
+    """Input pages may carry columns of their own (``entity_id`` here, any
+    column of a user's table in general). The committed ``blocked`` stage
+    has one fixed layout, so the merge-on-read view over base + fold has
+    exactly ``BLOCKED_COLS + norm_text_hash`` and the same rows as a run
+    over the same pages without the extra column."""
+    from ai_data_matching_spark.operators.blocking import BLOCKED_COLS
+    from ai_data_matching_spark.operators.incremental import fold_incremental
 
-    from ai_data_matching_spark.sources.tables import config_fingerprint
-
-    pages = pages_small.drop("entity_id")
-    base = _split(pages, 4, 0).unionByName(_split(pages, 4, 1)).unionByName(
-        _split(pages, 4, 2)
-    )
-    batch = _split(pages, 4, 3)
-
-    # reference run on a scratch root gives (a) the delta content a real
-    # fold commits and (b) the expected clustering
-    scratch = TableIO(str(tmp_path / "scratch"))
-    run_pipeline(spark, base, io=scratch, cfg=CFG)
-    ref = run_incremental(spark, batch, scratch, "b1", cfg=CFG)
-
-    # same cfg + batch_id + prior ⇒ same fingerprint on both roots
-    cfg_fp = config_fingerprint(asdict(CFG))
-    fp = config_fingerprint({"cfg": asdict(CFG), "batch": "b1", "prior": cfg_fp})
-
-    io = TableIO(str(tmp_path / "snaps"))
-    run_pipeline(spark, base, io=io, cfg=CFG)
-    kept = scratch.read_snapshot(
-        spark, scratch.last_committed("blocked_delta", fp)
-    )
-    io.commit(
-        kept.drop("_batch_status", "norm_text_hash"),
-        "blocked_delta",
-        fp,
-        extra={"cfg_fp": cfg_fp, "prior": cfg_fp, "kind": "delta"},
-    )
-
-    res = run_incremental(spark, batch, io, "b1", cfg=CFG)
-    assert "blocked" in res.resumed_stages
-    assert _partition(res.assigned) == _partition(ref.assigned)
+    states = []
+    for name, pages in (("extra", pages_small), ("plain", pages_small.drop("entity_id"))):
+        io = TableIO(str(tmp_path / name))
+        run_pipeline(spark, _split(pages, 3, 0).unionByName(_split(pages, 3, 1)), io=io, cfg=CFG)
+        fold = fold_incremental(spark, _split(pages, 3, 2), io, "b1", cfg=CFG)
+        states.append(io.read_state(spark, "blocked", fold.fingerprint))
+    extra, plain = states
+    assert extra.columns == BLOCKED_COLS + ["norm_text_hash"]
+    assert extra.count() == plain.count() > 0
+    assert extra.exceptAll(plain).count() == 0 and plain.exceptAll(extra).count() == 0
 
 
 def test_gc_compacts_only_chain_boundary(spark, pages_small, tmp_path):

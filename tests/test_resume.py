@@ -105,24 +105,49 @@ def test_killed_pipeline_resumes_and_matches_fresh_run(spark, pages_small, tmp_p
         }
 
 
-def test_sketchless_extract_snapshot_refused_before_blocked_commit(
-    spark, pages_small, tmp_path
-):
-    """An ``extract`` snapshot in the older stage-1 layout (text columns,
-    no sketches) must make the blocked stage raise BEFORE it commits —
-    otherwise a sketchless blocked snapshot is committed and every rerun
-    resumes it."""
+def test_snapshot_from_older_layout_refused(spark, pages_small, tmp_path):
+    """Records committed by older code (no current ``layout`` stamp) are
+    refused by the one manifest check in ``TableIO.read_snapshot``: a
+    resume raises before ``blocked`` commits, a fold onto such a chain
+    raises before it commits anything, and ``gc(spark=None)`` — which
+    reads only the manifest — still expires the old root."""
+    import json
     from dataclasses import asdict
 
-    from ai_data_matching_spark.operators.blocking import with_extract_sketch_keys
+    from pyspark.sql import functions as F
 
-    io = TableIO(str(tmp_path / "pipe"))
+    from ai_data_matching_spark.operators.blocking import with_extract_sketch_keys
+    from ai_data_matching_spark.operators.incremental import fold_incremental
+
+    def strip_layout(io):
+        records = io._read_manifest()
+        for rec in records:
+            rec.pop("layout")
+        with open(io._manifest_path, "w") as f:
+            json.dump(records, f)
+
     pages = pages_small.drop("entity_id")
     fp = config_fingerprint(asdict(PipelineConfig()))
-    old_layout = with_extract_sketch_keys(pages).drop(
-        "simhash", "minhash_sig", "block_keys"
-    )
-    io.commit(old_layout, "extract", fp, extra={"cfg_fp": fp})
-    with pytest.raises(ValueError, match="drop that snapshot"):
+
+    # only an extract record is committed
+    io = TableIO(str(tmp_path / "extract_only"))
+    io.commit(with_extract_sketch_keys(pages), "extract", fp, extra={"cfg_fp": fp})
+    strip_layout(io)
+    with pytest.raises(ValueError, match="fresh table root"):
         run_pipeline(spark, pages, io=io)
     assert io.last_committed("blocked", fp) is None
+
+    # a base run plus one fold is committed
+    bucket = F.pmod(F.xxhash64("url"), F.lit(3))
+    io = TableIO(str(tmp_path / "chain"))
+    run_pipeline(spark, pages.filter(bucket == 0), io=io)
+    b1 = fold_incremental(spark, pages.filter(bucket == 1), io, "b1")
+    strip_layout(io)
+    n_records = len(io._read_manifest())
+    with pytest.raises(ValueError, match="fresh table root"):
+        fold_incremental(
+            spark, pages.filter(bucket == 2), io, "b2", prior_fingerprint=b1.fingerprint
+        )
+    assert len(io._read_manifest()) == n_records
+    report = io.gc(keep_last=1)
+    assert report["chain_head"] == b1.fingerprint

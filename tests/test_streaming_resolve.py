@@ -5,7 +5,7 @@ recompute over everything dropped (streaming/resolve.py contract)."""
 from pyspark.sql import functions as F
 
 from ai_data_matching_spark.pipeline import PipelineConfig, run_pipeline
-from ai_data_matching_spark.sources.tables import TableIO
+from ai_data_matching_spark.sources.tables import SNAPSHOT_LAYOUT, TableIO
 from ai_data_matching_spark.streaming.resolve import (
     latest_state_fingerprint,
     resolve_stream,
@@ -62,3 +62,5 @@ def test_drops_fold_into_committed_state(spark, pages_small, tmp_path):
     # no pending files → draining again commits nothing new
     resolve_stream(spark, drops, io, ckpt, cfg=CFG)
     assert latest_state_fingerprint(io) == fp2
+    # every record, bootstrap and fold alike, carries the current layout
+    assert {rec.get("layout") for rec in io._read_manifest()} == {SNAPSHOT_LAYOUT}
