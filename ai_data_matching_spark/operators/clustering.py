@@ -153,10 +153,13 @@ def union_find_arrow_table(tbl):
     )
 
 
+# large-star/small-star converges in O(log n) rounds; the cap only
+# bounds a run that never reaches the fixpoint
+MAX_ITERATIONS = 50
+
+
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = 50,
-    checkpoint_fn=None,
     small_graph_threshold: int = DEFAULT_SMALL_GRAPH_EDGES,
 ) -> tuple[DataFrame, int]:
     """Compute connected components of an undirected edge list.
@@ -170,14 +173,8 @@ def connected_components(
     graph is solved driver-side (union-find, n_iterations = 0); above it,
     the distributed large-star/small-star loop runs. Pass
     ``small_graph_threshold=0`` to force the iterative path (tests do).
-
-    ``checkpoint_fn(df, iteration) -> df`` lets the pipeline swap in
-    Iceberg/parquet snapshot checkpoints; defaults to localCheckpoint.
+    Each round is cut with an eager ``localCheckpoint``.
     """
-    if checkpoint_fn is None:
-        def checkpoint_fn(df: DataFrame, _i: int) -> DataFrame:
-            return df.localCheckpoint(eager=True)
-
     slim = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     if small_graph_threshold:
         # Gate with a limit-BOUNDED count: the probe materializes at most
@@ -198,17 +195,16 @@ def connected_components(
             probe_n = slim.limit(small_graph_threshold + 1).count()
             if probe_n <= small_graph_threshold:
                 return _union_find_arrow(slim.toArrow(), edges.sparkSession), 0
-            cur = checkpoint_fn(slim, 0)
+            cur = slim.localCheckpoint(eager=True)
         finally:
             slim.unpersist()
     else:
-        cur = checkpoint_fn(slim, 0)
+        cur = slim.localCheckpoint(eager=True)
     prev_fp = _fingerprint(cur)
     iterations = 0
-    for it in range(1, max_iterations + 1):
+    for it in range(1, MAX_ITERATIONS + 1):
         iterations = it
-        nxt = _small_star(_large_star(cur))
-        nxt = checkpoint_fn(nxt, it)
+        nxt = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         fp = _fingerprint(nxt)
         cur = nxt
         if fp == prev_fp:

@@ -43,11 +43,12 @@ Each batch commits ``blocked_delta`` / ``edges_delta`` /
 O(batch / touched), never a rewrite of the O(history) state. The full
 state view is reconstructed on read by folding the delta chain over the
 nearest full snapshot (``TableIO.read_state`` — the Iceberg
-merge-on-read shape), and every ``compact_every``-th batch additionally
-commits full snapshots so the read chain stays bounded and gc can
-expire ancestry. A killed incremental run resumes per stage exactly
-like the base pipeline, and the next batch chains on this batch's
-committed state.
+merge-on-read shape). Once the chain reaches ``COMPACT_EVERY`` deltas the
+fold compacts its head through ``TableIO.compact_state`` (the same
+rewrite gc uses), so the read chain stays bounded and gc can expire
+ancestry. A killed incremental run resumes per stage exactly like the
+base pipeline, and the next batch chains on this batch's committed
+state.
 """
 
 from __future__ import annotations
@@ -79,6 +80,10 @@ from .clustering import (
 )
 from .consolidate import consolidate_clusters, match_statistics
 from .scoring import fuzzy_match_edges, score_pairs, union_edges
+
+# A fold whose state sits this many deltas above the nearest full
+# snapshot compacts it (TableIO.compact_state).
+COMPACT_EVERY = 8
 
 
 def exact_match_edges_touched(blocked_union: DataFrame, new_flag: str = "_is_new") -> DataFrame:
@@ -416,7 +421,6 @@ def fold_incremental(
     batch_id: str,
     cfg: PipelineConfig | None = None,
     prior_fingerprint: str | None = None,
-    compact_every: int = 8,
 ) -> FoldCommit:
     """Resolve ``new_pages`` (url, warc_ts, html[, text, lang]) against the
     prior committed run and commit the state DELTA — commits only: no
@@ -430,10 +434,12 @@ def fold_incremental(
     O(batch∕touched), never a rewrite of the O(history) state (the
     Iceberg merge-on-read shape; TableIO.read_state reconstructs the
     full view by folding the delta chain over the nearest full
-    snapshot). Every ``compact_every``-th batch additionally commits
-    full ``blocked`` / ``edges`` / ``labels`` snapshots, bounding the
-    read chain and letting gc expire ancestry. The run is resumable per
-    stage and the next batch chains on its fingerprint either way.
+    snapshot). When the chain at this fingerprint reaches
+    ``COMPACT_EVERY`` deltas, the fold ends with
+    ``TableIO.compact_state``, which commits full ``blocked`` / ``edges``
+    / ``labels`` snapshots beside the deltas, bounding the read chain and
+    letting gc expire ancestry. The run is resumable per stage and the
+    next batch chains on its fingerprint either way.
     """
     cfg = cfg or PipelineConfig()
     cfg_fp = config_fingerprint(asdict(cfg))
@@ -441,22 +447,7 @@ def fold_incremental(
     fp = config_fingerprint({"cfg": asdict(cfg), "batch": batch_id, "prior": base_fp})
     resumed: list[str] = []
 
-    # Compaction decision: a function of the PRIOR chain — OR of this
-    # fold's own already-committed full records. The second clause makes
-    # the decision stable across a killed retry even when gc compacted
-    # the prior head in between (chain_length then reads 0 and the bare
-    # threshold would flip to False): a first attempt that committed its
-    # full 'blocked' snapshot and died before 'edges'/'labels' must
-    # finish the set on retry, or the fingerprint is left permanently
-    # stage-misaligned (full blocked + delta edges) — the docstring's
-    # "every compact_every-th batch commits full snapshots" broken, and
-    # the read chain unbounded past it.
-    compact = compact_every > 0 and (
-        io.chain_length("blocked", base_fp) + 1 >= compact_every
-        or any(io.last_committed(s, fp) is not None for s in ("blocked", "edges", "labels"))
-    )
     delta_extra = {"cfg_fp": cfg_fp, "prior": base_fp, "kind": "delta"}
-    full_extra = {"cfg_fp": cfg_fp, "prior": base_fp, "kind": "full"}
 
     # Prior state views are read LAZILY: a stage that resumes from its own
     # committed snapshot never touches them — so a killed head-batch retry
@@ -482,13 +473,6 @@ def fold_incremental(
         if was_resumed:
             resumed.append(name)
         return df
-
-    def maybe_compact(name: str) -> None:
-        """On a compaction batch, materialize the merge-on-read state view
-        at ``fp`` as its own full snapshot (idempotent on retry). Eager,
-        so a caller that never reads the views still bounds the chain."""
-        if compact and io.last_committed(name, fp) is None:
-            io.commit(io.read_state(spark, name, fp), name, fp, extra=full_extra)
 
     # batch sketching: same fused kernel + key derivation as the pipeline.
     # Incoming rows are classified against the committed state by CONTENT,
@@ -620,27 +604,20 @@ def fold_incremental(
 
     kept = stage_delta("blocked", _blocked_delta)
 
-    def _blocked_view() -> DataFrame:
-        """The flagged blocked union (prior ∖ changed ∪ kept) the edge
-        stage consumes. LAZY — only a recomputing edge stage builds it,
-        so a fully-resumed retry never touches the prior chain (which a
-        gc-compacted head may have expired)."""
-        # refresh rows replace their prior row too (newer warc_ts, same
-        # content) — they must join the supersede set or the view holds
-        # two rows per refreshed url
+    def _edges_delta() -> DataFrame:
+        # The flagged blocked union (prior ∖ changed ∪ kept). Built only
+        # when this stage recomputes, so a fully-resumed retry never
+        # touches the prior chain (which a gc-compacted head may have
+        # expired). Refresh rows replace their prior row too (newer
+        # warc_ts, same content) — they must join the supersede set or
+        # the union holds two rows per refreshed url.
         changed_urls = kept.filter(
             F.col("_batch_status").isin("changed", "refresh")
         ).select("url")
-        # norm_text_hash rides along so a compaction batch bakes it into
-        # the full snapshot; the edge consumers below never select it —
-        # column pruning drops it
-        prior_keep = (
+        blocked = (
             _prior("blocked")
-            .select(*BLOCKED_COLS, "norm_text_hash")
             .join(changed_urls, "url", "left_anti")
-        )
-        return (
-            prior_keep.withColumn("_is_new", F.lit(False))
+            .withColumn("_is_new", F.lit(False))
             .withColumn("_batch_status", F.lit(None).cast("string"))
             .unionByName(
                 # refresh rows are metadata-only replacements: identical
@@ -651,40 +628,6 @@ def fold_incremental(
                 kept.withColumn("_is_new", F.col("_batch_status") != F.lit("refresh"))
             )
         )
-
-    if compact and io.last_committed("blocked", fp) is None:
-        io.commit(
-            _blocked_view().select(*BLOCKED_COLS, "norm_text_hash"),
-            "blocked",
-            fp,
-            extra=full_extra,
-        )
-
-    def _edges_delta() -> DataFrame:
-        # On a compaction fold the full blocked snapshot was committed
-        # just above — read IT back instead of rebuilding _blocked_view(),
-        # whose O(history) prior-scan + anti-join + union would otherwise
-        # execute a SECOND time inside this stage's commit (the committed
-        # parquet and the view hold identical rows by construction). The
-        # _is_new flag is reconstructed from the O(batch) kept delta;
-        # refresh rows stay False, same as the view.
-        full_rec = io.last_committed("blocked", fp)
-        if full_rec is not None:
-            rescored = kept.filter(F.col("_batch_status") != F.lit("refresh"))
-            blocked = (
-                io.read_snapshot(spark, full_rec)
-                .join(
-                    F.broadcast(
-                        rescored.select("url", F.lit(True).alias("_kept_new"))
-                    ),
-                    "url",
-                    "left",
-                )
-                .withColumn("_is_new", F.coalesce(F.col("_kept_new"), F.lit(False)))
-                .drop("_kept_new")
-            )
-        else:
-            blocked = _blocked_view()
         # persisted: exact_inc feeds BOTH the route_unmatched anti-join
         # and the edge union inside one action — Spark does not share
         # common subtrees across DAG branches, so without the persist the
@@ -725,7 +668,6 @@ def fold_incremental(
     # consume it directly instead of re-resolving the manifest record
     # and rebuilding the same scan plan twice per fold.
     edge_delta = stage_delta("edges", _edges_delta)
-    maybe_compact("edges")
 
     cc_iters = 0
 
@@ -748,7 +690,6 @@ def fold_incremental(
         return d
 
     stage_delta("labels", _labels_delta)
-    maybe_compact("labels")
 
     # Per-batch metrics are DELTA-scoped: they describe THIS batch's
     # output (the committed O(batch) edge delta), never an O(history)
@@ -784,6 +725,14 @@ def fold_incremental(
     ]
     io.write_metrics(batch_id, "final", parts)
 
+    # Compaction is decided on labels: compact_state rewrites blocked,
+    # edges and labels in that order, so the labels chain is never
+    # shorter than the others, and a kill inside compact_state leaves
+    # labels delta-backed — the retry decides the same and compact_state
+    # skips the stages already full here.
+    if io.chain_length("labels", fp) >= COMPACT_EVERY:
+        io.compact_state(spark, fp)
+
     return FoldCommit(fp, resumed, cc_iters)
 
 
@@ -794,14 +743,11 @@ def run_incremental(
     batch_id: str,
     cfg: PipelineConfig | None = None,
     prior_fingerprint: str | None = None,
-    compact_every: int = 8,
 ) -> PipelineResult:
     """``fold_incremental``, then the full-state views of the folded state
     (assigned / clusters / edges / stats) as lazy merge-on-read frames —
     the same ``PipelineResult`` shape ``run_pipeline`` returns."""
-    fold = fold_incremental(
-        spark, new_pages, io, batch_id, cfg, prior_fingerprint, compact_every
-    )
+    fold = fold_incremental(spark, new_pages, io, batch_id, cfg, prior_fingerprint)
     fp = fold.fingerprint
     # consumed twice (clusters + stats) and by the caller — persist the
     # slim reconstructed view so the chain union + dedup shuffle runs

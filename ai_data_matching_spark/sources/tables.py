@@ -548,9 +548,8 @@ class TableIO:
         its nearest full snapshot, PER STAGE. The dedup memo is per
         stage, never global: a fingerprint can be full for one stage but
         delta for another (a crash between compact_state's per-stage
-        commits, or a killed compaction fold), and a global memo would
-        truncate the still-delta stage's walk at it — expiring ancestry
-        that stage still needs."""
+        commits), and a global memo would truncate the still-delta
+        stage's walk at it — expiring ancestry that stage still needs."""
         needed: set[str] = set()
         records = self._read_manifest()
         for stage in self._STATE_STAGES:
@@ -572,8 +571,14 @@ class TableIO:
         """Materialize full snapshots for every delta-backed state stage at
         ``fingerprint`` (merge-on-read → rewritten full state), making it
         self-contained so its ancestry can expire. Returns the stages
-        compacted. The Iceberg analog is a rewrite_data_files compaction
-        followed by expireSnapshots."""
+        compacted. Stages already full at ``fingerprint`` are skipped, so a
+        call killed between its per-stage commits completes on the next.
+        Its two callers: the fold, once its chain reaches
+        ``incremental.COMPACT_EVERY`` deltas, and ``gc`` for a kept head
+        whose ancestry would expire. Each record is tagged
+        ``compacted_from`` and keeps the delta's ``cfg_fp``. The Iceberg
+        analog is a rewrite_data_files compaction followed by
+        expireSnapshots."""
         compacted = []
         for stage in self._STATE_STAGES:
             rec, is_delta = self.state_record(stage, fingerprint)
@@ -587,7 +592,7 @@ class TableIO:
                 extra={
                     "kind": "full",
                     "compacted_from": rec["snapshot_id"],
-                    **({"cfg_fp": rec["cfg_fp"]} if "cfg_fp" in rec else {}),
+                    "cfg_fp": rec["cfg_fp"],
                 },
             )
             compacted.append(stage)
@@ -635,10 +640,12 @@ class TableIO:
                 fps.append(rec["fingerprint"])
         # Chain head = the newest ORIGINAL labels commit. Compaction
         # rewrites (compact_state full records, tagged compacted_from)
-        # are appended at gc time for OLDER fingerprints — taking the
-        # last labels record by position would hand the head to the
-        # boundary fingerprint a previous gc compacted, and a keep_last
-        # window anchored there would expire the true head's newer folds.
+        # are appended at gc time for OLDER fingerprints (a compacting
+        # fold's own labels_delta record still marks its fingerprint) —
+        # taking the last labels record by position would hand the head
+        # to the boundary fingerprint a previous gc compacted, and a
+        # keep_last window anchored there would expire the true head's
+        # newer folds.
         head = next(
             (
                 r["fingerprint"]

@@ -50,26 +50,23 @@ def latest_state_fingerprint(io: TableIO, expect_cfg_fp: str | None = None) -> s
     a restarted stream with a changed PipelineConfig must not silently fold
     new epochs onto state committed under different thresholds/caps — that
     would mix two configs within one resolved state. Commit records carry
-    ``cfg_fp`` (tables.commit extra); a mismatch raises. Records from
-    before cfg_fp existed can't be validated and pass through.
+    ``cfg_fp`` (tables.commit extra); a head record whose ``cfg_fp``
+    differs from it, or is missing, raises.
     """
     # incremental folds commit the labels stage as a DELTA snapshot
     # (merge-on-read chain); either record form marks a complete state.
-    # gc-time compaction REWRITES (tagged compacted_from) are skipped:
-    # they are appended last for an OLDER boundary fingerprint, and a
-    # restarted stream chaining onto one would silently orphan every
-    # fold committed after it (the drop files are already checkpointed
-    # and never re-delivered).
+    # Compaction rewrites (TableIO.compact_state, tagged compacted_from)
+    # are skipped. gc appends them last for an OLDER boundary
+    # fingerprint, and a restarted stream chaining onto one would
+    # silently orphan every fold committed after it (the drop files are
+    # already checkpointed and never re-delivered). A fold that compacts
+    # its own head leaves its labels_delta record, which still marks it.
     for rec in reversed(io._read_manifest()):
         if rec["stage"] in ("labels", "labels_delta") and (
             rec.get("compacted_from") is None
         ):
             rec_cfg = rec.get("cfg_fp")
-            if (
-                expect_cfg_fp is not None
-                and rec_cfg is not None
-                and rec_cfg != expect_cfg_fp
-            ):
+            if expect_cfg_fp is not None and rec_cfg != expect_cfg_fp:
                 raise ValueError(
                     f"committed state {rec['fingerprint']} was resolved under "
                     f"config {rec_cfg}, but the stream is configured with "

@@ -4,8 +4,11 @@
         --pairs N [--seed S]
 
 Each ref is checked out with ``git worktree add --detach`` into one temp
-dir; without ``change-ref`` the current checkout (uncommitted work
-included) is the change side. The command and ``run_seconds`` come from
+dir. Without ``change-ref`` the change side is the working tree
+(uncommitted and untracked files included, ignored ones not), snapshot
+as a commit on top of HEAD through a temporary index, so both sides run
+from fresh checkouts; the repo's own index, HEAD and stash are left
+untouched. The command and ``run_seconds`` come from
 ``BENCHMARK.json``, which must be identical on both sides. Runs go one at
 a time, each with its own checkout as cwd; pair i runs seed S+i on both
 sides, and the side that runs first alternates between pairs. Use an even
@@ -89,10 +92,25 @@ def run_once(cmd: list[str], cwd: str) -> dict:
     return values
 
 
-def git(*args: str, cwd: str | None = None) -> str:
+def git(*args: str, cwd: str | None = None, env: dict | None = None) -> str:
     return subprocess.run(
-        ["git", *args], cwd=cwd, check=True, capture_output=True, text=True
+        ["git", *args], cwd=cwd, env=env, check=True, capture_output=True, text=True
     ).stdout.strip()
+
+
+def snapshot_working_tree(top: str, tmp: str) -> str:
+    """Commit the working tree of ``top`` (child of HEAD) through a
+    temporary index under ``tmp`` and return its id; nothing the repo's
+    user sees (index, HEAD, refs, stash) changes."""
+    env = {
+        **os.environ,
+        "GIT_INDEX_FILE": os.path.join(tmp, "index"),
+        "GIT_AUTHOR_NAME": "ab", "GIT_AUTHOR_EMAIL": "ab@localhost",
+        "GIT_COMMITTER_NAME": "ab", "GIT_COMMITTER_EMAIL": "ab@localhost",
+    }
+    git("add", "-A", cwd=top, env=env)
+    tree = git("write-tree", cwd=top, env=env)
+    return git("commit-tree", tree, "-p", "HEAD", "-m", "ab: working tree", cwd=top, env=env)
 
 
 def main(argv=None, runner=run_once) -> int:
@@ -110,8 +128,7 @@ def main(argv=None, runner=run_once) -> int:
         sides = {}
         for side, ref in (("base", args.base_ref), ("change", args.change_ref)):
             if ref is None:
-                sides[side] = top
-                continue
+                ref = snapshot_working_tree(top, tmp)
             path = os.path.join(tmp, side)
             added.append(path)
             git("worktree", "add", "--detach", path, ref, cwd=top)

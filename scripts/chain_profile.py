@@ -3,11 +3,12 @@
 The delta-commit design (operators/incremental.py) claims per-fold cost
 is O(batch), with the merge-on-read chain bounded by compaction: each
 fold commits blocked/edges/labels DELTAS, `read_state` unions the chain
-on read, and every ``compact_every``-th fold materializes full
-snapshots so the union never exceeds ``compact_every`` frames. If that
-claim is wrong, fold wall-time grows monotonically with batch index;
-if it is right, the series is flat with a bump on compaction folds
-(they pay the full-state write) and a dip right after (chain length 1).
+on read, and the fold whose chain reaches ``incremental.COMPACT_EVERY``
+deltas compacts it to full snapshots (``TableIO.compact_state``) so the
+union never exceeds ``COMPACT_EVERY`` frames. If that claim is wrong,
+fold wall-time grows monotonically with batch index; if it is right,
+the series is flat with a bump on the compaction fold (it pays the
+full-state write) and a dip right after (chain length 1).
 
 This script measures exactly that: a base run, then K same-sized folds
 chained on one snapshot root, printing per-fold seconds + the chain
@@ -16,6 +17,9 @@ bench artifact; per-phase fold spans come from
 ``perfbench/run.py --workload stream --trace 1``.
 
 Usage: python scripts/chain_profile.py [n_pages] [n_folds] [cpus]
+
+``n_folds`` defaults to ``COMPACT_EVERY + 1``: one compaction fold and
+one fold after it.
 """
 
 from __future__ import annotations
@@ -29,10 +33,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from ai_data_matching_spark.operators.incremental import COMPACT_EVERY  # noqa: E402
+
 N_PAGES = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-N_FOLDS = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+N_FOLDS = int(sys.argv[2]) if len(sys.argv) > 2 else COMPACT_EVERY + 1
 CPUS = int(sys.argv[3]) if len(sys.argv) > 3 else os.cpu_count()
-COMPACT_EVERY = int(os.environ.get("CHAIN_COMPACT_EVERY", "3"))
 
 
 def main() -> None:
@@ -106,7 +111,6 @@ def _profile(spark, io, root: str, warm_root: str) -> None:
             io,
             batch_id=f"b{k}",
             prior_fingerprint=fp,
-            compact_every=COMPACT_EVERY,
         )
         res.assigned.count()  # materialize the public view, like the bench
         fold_s = time.perf_counter() - t0
@@ -132,8 +136,6 @@ def _profile(spark, io, root: str, warm_root: str) -> None:
         )
         print(json.dumps(rows[-1]), flush=True)
 
-    # CHAIN_COMPACT_EVERY=1 makes every fold a compaction fold — the
-    # non-compaction spread is then undefined, not a crash
     flat = [r["seconds"] for r in rows if not r["compaction_fold"]]
     print(
         json.dumps(

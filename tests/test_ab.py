@@ -116,3 +116,30 @@ def test_warm_up_runs_reach_no_summary(capsys):
     assert [line.split()[0] for line in out.splitlines()[:2]] == ["warm-up"] * 2
     assert "1000" not in out.split("\n\n", 1)[1]
     assert out.count("median 10 -> 10") == 4
+
+
+def test_working_tree_change_side_runs_from_a_snapshot_checkout():
+    """Without a change ref both sides run from fresh checkouts: the change
+    side holds the working tree (untracked files included), the base side
+    does not, and the repo's status is the same before and after."""
+    _skip_outside_git_work_tree()
+    top = ab.git("rev-parse", "--show-toplevel", cwd=os.path.dirname(__file__))
+    probe = os.path.join(top, "ab_probe_untracked.txt")
+    seen = {}
+
+    def runner(cmd, cwd):
+        seen.setdefault(cwd, os.path.isfile(os.path.join(cwd, "ab_probe_untracked.txt")))
+        return {"wall_s": 1.0, "docs_per_s": 1.0, "setup_s": 1.0, "latency_p50_s": 1.0}
+
+    try:
+        with open(probe, "w") as f:
+            f.write("probe\n")
+        status = ab.git("status", "--porcelain", cwd=top)
+        assert ab.main(["HEAD", "--workload", "batch", "--pairs", "2"], runner=runner) == 0
+        assert ab.git("status", "--porcelain", cwd=top) == status
+    finally:
+        os.remove(probe)
+    assert len(seen) == 2 and top not in seen
+    assert sorted(seen.values()) == [False, True]  # the probe: change side only
+    assert all(os.path.basename(cwd) == ("change" if has else "base")
+               for cwd, has in seen.items())

@@ -404,12 +404,15 @@ def test_gc_compacted_chain_still_resumes(spark, pages_small, tmp_path):
 
 
 def test_delta_commits_are_batch_sized_and_compaction_bounds_chain(
-    spark, pages_small, tmp_path
+    spark, pages_small, tmp_path, monkeypatch
 ):
     """The fold must never rewrite O(history) state: each batch commits
-    blocked/edges/labels DELTAS sized by the batch, and every
-    ``compact_every``-th batch materializes full snapshots so the read
-    chain resets (the merge-on-read + compaction contract)."""
+    blocked/edges/labels DELTAS sized by the batch, and the fold whose
+    chain reaches ``COMPACT_EVERY`` deltas materializes full snapshots so
+    the read chain resets (the merge-on-read + compaction contract)."""
+    from ai_data_matching_spark.operators import incremental
+
+    monkeypatch.setattr(incremental, "COMPACT_EVERY", 2)
     pages = pages_small.drop("entity_id")
     base = _split(pages, 4, 0).unionByName(_split(pages, 4, 1))
     b1 = _split(pages, 4, 2)
@@ -417,7 +420,7 @@ def test_delta_commits_are_batch_sized_and_compaction_bounds_chain(
 
     io = TableIO(str(tmp_path / "snaps"))
     run_pipeline(spark, base, io=io, cfg=CFG)
-    inc1 = run_incremental(spark, b1, io, "b1", cfg=CFG, compact_every=2)
+    inc1 = run_incremental(spark, b1, io, "b1", cfg=CFG)
 
     # batch 1: pure delta commits, sized by the batch — not the history
     d_rec = io.last_committed("blocked_delta", inc1.fingerprint)
@@ -426,10 +429,8 @@ def test_delta_commits_are_batch_sized_and_compaction_bounds_chain(
     assert io.last_committed("blocked", inc1.fingerprint) is None  # no full rewrite
     assert io.chain_length("blocked", inc1.fingerprint) == 1
 
-    # batch 2 is the compact_every-th: full snapshots land, chain resets
-    inc2 = run_incremental(
-        spark, b2, io, "b2", cfg=CFG, prior_fingerprint=inc1.fingerprint, compact_every=2
-    )
+    # batch 2 reaches COMPACT_EVERY: full snapshots land, chain resets
+    inc2 = run_incremental(spark, b2, io, "b2", cfg=CFG, prior_fingerprint=inc1.fingerprint)
     for stage in ("blocked", "edges", "labels"):
         full_rec = io.last_committed(stage, inc2.fingerprint)
         assert full_rec is not None and full_rec["kind"] == "full", stage
@@ -684,49 +685,57 @@ def test_ancestry_walks_every_stage_past_misaligned_fingerprint(
 
 
 def test_compaction_retry_completes_after_interleaved_gc(
-    spark, pages_small, tmp_path
+    spark, pages_small, tmp_path, monkeypatch
 ):
-    """A compaction fold killed after its full 'blocked' commit must
-    still commit full 'edges'/'labels' on retry even when gc compacted
-    the prior head in between (chain_length then reads 0 and the bare
-    threshold alone would skip them, leaving the fingerprint permanently
-    stage-misaligned)."""
-    from dataclasses import asdict
+    """A compaction fold killed inside compact_state, after its full
+    'blocked' commit and before 'edges', must still commit full
+    'edges'/'labels' on retry when gc ran in between: labels stays
+    delta-backed, so the retry decides to compact again and
+    compact_state skips the stage that is already full."""
+    import pytest
 
-    from ai_data_matching_spark.sources.tables import config_fingerprint
+    from ai_data_matching_spark.operators import incremental
 
+    monkeypatch.setattr(incremental, "COMPACT_EVERY", 2)
     pages = pages_small.drop("entity_id")
     io = TableIO(str(tmp_path / "snaps"))
     run_pipeline(spark, _split(pages, 4, 0), io=io, cfg=CFG)
     inc1 = run_incremental(spark, _split(pages, 4, 1), io, "b1", cfg=CFG)
 
-    # first attempt of a compaction fold dies right after the full
-    # blocked commit: simulate by committing ONLY that artifact under
-    # the retry's (deterministic) fingerprint
-    cfg_fp = config_fingerprint(asdict(CFG))
-    fp = config_fingerprint(
-        {"cfg": asdict(CFG), "batch": "b2", "prior": inc1.fingerprint}
-    )
-    blocked_view = io.read_state(spark, "blocked", inc1.fingerprint)
-    io.commit(
-        blocked_view.limit(0),  # content irrelevant — the retry resumes it
-        "blocked",
-        fp,
-        extra={"cfg_fp": cfg_fp, "prior": inc1.fingerprint, "kind": "full"},
-    )
-    # retry with a LONG compact_every (threshold alone says no):
-    run_incremental(
-        spark,
-        _split(pages, 4, 2),
-        io,
-        "b2",
-        cfg=CFG,
-        prior_fingerprint=inc1.fingerprint,
-        compact_every=1000,
-    )
-    for stage in ("edges", "labels"):
+    class Boom(RuntimeError):
+        pass
+
+    real_commit = TableIO.commit
+
+    def commit(self, df, stage, fingerprint, extra=None):
+        if stage == "edges":
+            raise Boom()
+        return real_commit(self, df, stage, fingerprint, extra)
+
+    def fold():
+        return incremental.fold_incremental(
+            spark, _split(pages, 4, 2), io, "b2", cfg=CFG,
+            prior_fingerprint=inc1.fingerprint,
+        )
+
+    with monkeypatch.context() as m:
+        m.setattr(TableIO, "commit", commit)
+        with pytest.raises(Boom):
+            fold()
+    fp = io._read_manifest()[-1]["fingerprint"]  # the full blocked commit
+    assert [io.state_record(s, fp)[1] for s in ("blocked", "edges", "labels")] == [
+        False, True, True
+    ]
+    io.gc(keep_last=1)
+    retry = fold()
+    assert retry.fingerprint == fp
+    assert set(retry.resumed_stages) == {"blocked", "edges", "labels"}
+    for stage in ("blocked", "edges", "labels"):
         rec, is_delta = io.state_record(stage, fp)
         assert rec is not None and not is_delta, stage
+    assert io.read_state(spark, "blocked", fp).count() == (
+        pages.filter(F.pmod(F.xxhash64("url"), F.lit(4)) < 3).count()
+    )
 
 
 def test_incremental_cc_equals_full_cc_on_random_fold_sequences(spark):
@@ -858,19 +867,14 @@ def test_fold_spark_job_budget(spark, pages_small, tmp_path):
 def test_stream_fold_compacts_without_views(spark, pages_small, tmp_path, monkeypatch):
     """resolve_stream runs the commit-only fold, which never builds the
     full-state views — the compaction commits must not depend on them.
-    On the ``compact_every``-th fold (1 here, so the first fold) the
-    stream still leaves full blocked / edges / labels snapshots beside
-    the deltas, and they hold the merge-on-read state."""
-    import functools
-
+    On the fold whose chain reaches ``COMPACT_EVERY`` deltas (1 here, so
+    the first fold) the stream still leaves full blocked / edges / labels
+    snapshots beside the deltas, they hold the merge-on-read state, and
+    the fold's fingerprint stays the chain head."""
     from ai_data_matching_spark.operators import incremental
     from ai_data_matching_spark.streaming import resolve
 
-    monkeypatch.setattr(
-        resolve,
-        "fold_incremental",
-        functools.partial(incremental.fold_incremental, compact_every=1),
-    )
+    monkeypatch.setattr(incremental, "COMPACT_EVERY", 1)
     pages = pages_small.drop("entity_id").select("url", "warc_ts", "html", "text", "lang")
     drops, ckpt = str(tmp_path / "drops"), str(tmp_path / "ckpt")
     io = TableIO(str(tmp_path / "snaps"))
@@ -889,3 +893,8 @@ def test_stream_fold_compacts_without_views(spark, pages_small, tmp_path, monkey
     blocked = io.read_snapshot(spark, io.last_committed("blocked", fp))
     assert blocked.count() == pages.filter(F.pmod(F.xxhash64("url"), F.lit(4)) < 2).count()
     assert labels.join(blocked, "url", "left_anti").count() == 0
+    # the compaction records are tagged compacted_from; the fold's own
+    # labels_delta record still marks the head
+    compacted = {r["fingerprint"] for r in io._read_manifest() if "compacted_from" in r}
+    assert compacted == {fp}
+    assert io.gc(keep_last=1)["chain_head"] == fp

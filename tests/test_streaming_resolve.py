@@ -64,3 +64,28 @@ def test_drops_fold_into_committed_state(spark, pages_small, tmp_path):
     assert latest_state_fingerprint(io) == fp2
     # every record, bootstrap and fold alike, carries the current layout
     assert {rec.get("layout") for rec in io._read_manifest()} == {SNAPSHOT_LAYOUT}
+
+
+def test_chain_head_config_mismatch_refused(spark, pages_small, tmp_path):
+    """A restarted stream must not fold onto state resolved under another
+    config: a head whose cfg_fp differs from the expected one raises, and
+    so does a head record that carries no cfg_fp at all."""
+    import json
+
+    import pytest
+
+    io = TableIO(str(tmp_path / "snaps"))
+    pages = pages_small.drop("entity_id").filter(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    fp = run_pipeline(spark, pages, io=io, cfg=CFG).fingerprint
+    assert latest_state_fingerprint(io, expect_cfg_fp=fp) == fp
+    with pytest.raises(ValueError, match="refusing to chain incompatible configs"):
+        latest_state_fingerprint(io, expect_cfg_fp="0" * 16)
+
+    records = io._read_manifest()
+    for rec in records:
+        if rec["stage"] == "labels":
+            del rec["cfg_fp"]
+    with open(io._manifest_path, "w") as f:
+        json.dump(records, f)
+    with pytest.raises(ValueError, match="refusing to chain incompatible configs"):
+        latest_state_fingerprint(io, expect_cfg_fp=fp)
