@@ -11,6 +11,10 @@ Graft analog of the reference's two-phase cascade:
 * reference leftover anti-join (/root/reference/src/matching_engine.py:129-133)
   → candidate pairs that are NOT exact go to phase-2 scoring.
 
+The base pipeline and the incremental fold share both phases: an
+``_is_new`` column in the input (the fold's old ∪ new union) cuts it to
+what the batch touches; input without it is all new and runs uncut.
+
 Sketches and keys come from ONE kernel: ``with_extract_sketch_keys``
 (fused extract → normalize → numpy sketch, one Arrow round trip) is the
 only stage-1+2 path — in-memory and checkpointed pipeline, fold and
@@ -24,11 +28,11 @@ Skew handling ("explicit skew splitting of hot domains", BASELINE.json):
   would otherwise generate O(g²) pairs) and reported in an overflow
   metric. Recall inside hot domains comes from the simhash band keys,
   which only collide for textually-near pages.
-* ``salted_equijoin`` is the generic salted hash join used wherever a
-  many-to-one join hits a hot key (e.g. attaching per-key block stats or
-  cluster labels back to pages): the hot keys on the fact side get a
+* ``salted_equijoin`` is the J1 salted hash join operator (SURVEY J1,
+  tested in tests/test_blocking.py): the hot keys on the fact side get a
   random-but-deterministic salt, the dim side is replicated across salts.
-  AQE skew-join handles moderate skew; this handles the pathological tail.
+  No engine stage calls it — the pipeline's joins rely on AQE skew-join
+  for moderate skew and on the hot-key exclusion above for the tail.
 """
 
 from __future__ import annotations
@@ -36,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import persist_tracked
 from ..extract import make_extract_sketch_udf, normalized_domain_col
 from ..functions.hashing import simhash_bands
 
@@ -140,7 +145,27 @@ def exact_match_edges(blocked: DataFrame) -> DataFrame:
 
     Returns star edges ``(src, dst, score=1.0, match_type='exact')`` where
     dst = lexicographic min url of the exact group. Linear in group size.
+
+    With an ``_is_new`` column (the fold's ``prior ∖ changed ∪ kept``
+    union) the input is first cut by a broadcast semi-join on the batch's
+    keys, so only groups with a new member — ALL their members, a new rep
+    must link the old ones — reach the groupBy: no O(history) shuffle.
     """
+    if "_is_new" in blocked.columns:
+        batch_keys = (
+            blocked.filter(F.col("_is_new"))
+            .select(F.col("norm_domain").alias("_gd"), F.col("simhash").alias("_gs"))
+            .dropDuplicates(["_gd", "_gs"])
+        )
+        # persisted: feeds both the group aggregate and the join-back
+        blocked = persist_tracked(
+            blocked.select("norm_domain", "simhash", "url").join(
+                F.broadcast(batch_keys),
+                F.col("norm_domain").eqNullSafe(F.col("_gd"))
+                & F.col("simhash").eqNullSafe(F.col("_gs")),
+                "left_semi",
+            )
+        )
     grp = (
         blocked.groupBy("norm_domain", "simhash")
         .agg(F.min("url").alias("_rep"), F.count("*").alias("_n"))
@@ -171,7 +196,7 @@ def exact_match_edges(blocked: DataFrame) -> DataFrame:
 
 
 def hot_keys(exploded_keys: DataFrame, max_block_size: int) -> DataFrame:
-    """Frequency scan over exploded (block_key, url): keys above the cap.
+    """Frequency scan over exploded (block_key, uid): keys above the cap.
 
     Map-side partial aggregation makes this one cheap shuffle of
     (key, count) — NOT of the raw rows.
@@ -200,9 +225,13 @@ def candidate_pairs(
     * overflow — (block_key, block_size) for skew-split (skipped) keys,
       persisted as a metric so dropped coverage is visible, never silent.
 
-    The self-join is an equi-join on block_key; the ``url_a < url_b``
-    predicate halves the output and removes self-pairs. Keys larger than
-    ``max_block_size`` are excluded *before* the join (skew splitting).
+    The self-join is an equi-join on block_key of new rows × all rows;
+    keys larger than ``max_block_size`` are excluded *before* the join
+    (skew splitting). Without an ``_is_new`` column every row is new.
+    With it (the fold's union) the exploded keys are first cut to the
+    batch's keys by a broadcast semi-join: only pairs with a new endpoint
+    are generated, and the cap (full block sizes) and overflow cover the
+    batch's keys only.
     """
     # SLIM pair generation: the self-join + cross-key dedup shuffle only
     # (block_key, uid) rows, where uid = xxhash64(url) — an 8-byte
@@ -214,23 +243,36 @@ def candidate_pairs(
     # identical to the string-keyed form. A uid collision (two urls, one
     # hash: P ≈ n²/2⁶⁴, ~0.03 expected pairs at 10¹² docs) drops that one
     # candidate pair — bounded recall loss, never a wrong edge.
+    flagged = "_is_new" in blocked.columns
     sel = blocked.select(
         F.xxhash64(F.col("url")).alias("uid"),
         F.col("simhash"),
+        (F.col("_is_new") if flagged else F.lit(True)).alias("_new"),
         F.explode("block_keys").alias("block_key"),
     )
+    if flagged:
+        # an untouched key yields no new pair: cut BEFORE the frequency
+        # scan, which is otherwise an O(history) shuffle per fold.
+        # Persisted: read by the hot-key agg and both self-join sides.
+        batch_keys = sel.filter(F.col("_new")).select("block_key").dropDuplicates()
+        sel = persist_tracked(sel.join(F.broadcast(batch_keys), "block_key", "left_semi"))
     # persisted: the hot-key frame is tiny (keys above the cap) but its
-    # input scan is O(corpus × keys) — and it is consumed twice, as the
+    # input scan is O(rows × keys) — and it is consumed twice, as the
     # broadcast exclusion below AND as the caller's overflow metric (a
     # separate action). Without the persist each action repeats the full
     # explode + partial-agg scan.
-    from ..cache import persist_tracked
-
     hot = persist_tracked(hot_keys(sel.select("block_key", "uid"), max_block_size))
     cold = sel.join(F.broadcast(hot.select("block_key")), "block_key", "left_anti")
 
-    a = cold.select("block_key", F.col("uid").alias("uid_a"), F.col("simhash").alias("_sh_a"))
-    b = cold.select("block_key", F.col("uid").alias("uid_b"), F.col("simhash").alias("_sh_b"))
+    a = cold.filter(F.col("_new")).select(
+        "block_key", F.col("uid").alias("uid_a"), F.col("simhash").alias("_sh_a")
+    )
+    b = cold.select(
+        "block_key",
+        F.col("uid").alias("uid_b"),
+        F.col("simhash").alias("_sh_b"),
+        F.col("_new").alias("_new_b"),
+    )
     # Simhash band keys are 16-bit, so UNRELATED pages collide by chance at
     # a rate of n²/2^16 per band — quadratic in corpus size. A native
     # full-simhash Hamming filter on band-derived pairs (JVM bit_count,
@@ -242,11 +284,20 @@ def candidate_pairs(
     ham_ok = (~F.col("block_key").startswith("sh")) | (
         F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))) <= max_band_hamming
     )
+    # new-new pairs keep one of their two orders, new-old pairs (met
+    # once; never a uid collision) are oriented by least/greatest; with
+    # every row new this folds to uid_a < uid_b
+    one_side = (F.col("uid_a") < F.col("uid_b")) | (
+        ~F.col("_new_b") & (F.col("uid_a") != F.col("uid_b"))
+    )
     slim = (
         a.join(b, "block_key")
-        .filter(F.col("uid_a") < F.col("uid_b"))
+        .filter(one_side)
         .filter(ham_ok)
-        .select("uid_a", "uid_b")
+        .select(
+            F.least("uid_a", "uid_b").alias("uid_a"),
+            F.greatest("uid_a", "uid_b").alias("uid_b"),
+        )
     )
     return _attach_payload(blocked, slim), hot
 
@@ -255,8 +306,7 @@ def _attach_payload(blocked: DataFrame, slim: DataFrame) -> DataFrame:
     """Melt-attach: the ``(uid_a, uid_b)`` pairs ``slim`` (uid =
     xxhash64(url), possibly repeated across block keys) → deduplicated
     ``(url_a, url_b, text_a, text_b, sig_a, sig_b)`` with url_a < url_b,
-    payload drawn from ``blocked``. Shared by ``candidate_pairs`` and the
-    fold's ``incremental_candidate_pairs``.
+    payload drawn from ``blocked``.
 
     Each pair melts into (pair, side, uid) rows so ONE corpus scan feeds
     both endpoints through a single equi-join (AQE broadcasts the O(pairs)

@@ -21,13 +21,15 @@ only pairs that TOUCH the new batch:
   for the new pairs. Per-batch ingest counts (new / changed /
   refreshed / dropped) ride the fold's one ``final`` metric frame
   (``_metrics/final/<batch_id>``, ``TableIO.write_metrics``).
-* candidate generation — an asymmetric equi-join: new-side keys against
-  all-side keys, so old-old pairs are never materialized. Orientation,
-  Hamming prefilter, cross-key dedup and payload attach are shared with
-  ``blocking.candidate_pairs`` semantics (url_a < url_b contract).
-* exact phase — (norm_domain, simhash) groups that gained ≥1 new member
-  re-emit star edges for ALL their members → union-group rep, so a new
-  page joining a previously-singleton group links the old member too.
+* candidate generation — ``blocking.candidate_pairs`` over the flagged
+  union: the ``_is_new`` column cuts the exploded keys to the batch's
+  keys and joins new rows against all rows, so old-old pairs are never
+  materialized (url_a < url_b contract, the base pipeline's code path).
+* exact phase — ``blocking.exact_match_edges`` over the same union: the
+  ``_is_new`` column cuts it to the (norm_domain, simhash) groups that
+  gained ≥1 new member, which re-emit star edges for ALL their members
+  → union-group rep, so a new page joining a previously-singleton group
+  links the old member too.
 * clustering — connected components over prior edges ∪ new edges. Edges
   are only ever ADDED, so incremental clustering is monotone: pages
   co-clustered before stay co-clustered after (the standard contract
@@ -64,11 +66,8 @@ from ..pipeline import PipelineConfig, PipelineResult
 from ..sources.tables import TableIO, config_fingerprint, metric_part
 from .blocking import (
     BLOCKED_COLS,
-    DEFAULT_MAX_BAND_HAMMING,
-    DEFAULT_MAX_BLOCK_SIZE,
-    _attach_payload,
+    candidate_pairs,
     exact_match_edges,
-    hot_keys,
     latest_crawl_wins,
     route_unmatched,
     with_extract_sketch_keys,
@@ -84,41 +83,6 @@ from .scoring import fuzzy_match_edges, score_pairs, union_edges
 # A fold whose state sits this many deltas above the nearest full
 # snapshot compacts it (TableIO.compact_state).
 COMPACT_EVERY = 8
-
-
-def exact_match_edges_touched(blocked_union: DataFrame, new_flag: str = "_is_new") -> DataFrame:
-    """Star edges for exact groups that gained at least one new member.
-
-    Emits member → union-group-min-url for EVERY member of a touched
-    group (old members included): if the batch page becomes the group's
-    new rep, linking only new members would leave the old ones
-    disconnected from it. Untouched groups keep their prior edges.
-
-    A group is touched iff its (norm_domain, simhash) key appears in the
-    batch — so the history side is first cut by a BROADCAST semi-join on
-    the batch's O(batch) distinct keys, and only the surviving members
-    (touched groups' full membership) reach the groupBy and the star
-    join-back. The previous form shuffled the ENTIRE union through the
-    groupBy to then discard every untouched group — O(history) shuffle
-    per batch for output that is O(touched).
-    """
-    batch_keys = (
-        blocked_union.filter(F.col(new_flag))
-        .select(F.col("norm_domain").alias("_gd"), F.col("simhash").alias("_gs"))
-        .dropDuplicates(["_gd", "_gs"])
-    )
-    # persisted: touched feeds both the group aggregate and the star
-    # join-back of exact_match_edges (one action, two DAG branches — no
-    # subtree sharing)
-    touched = persist_tracked(
-        blocked_union.select("norm_domain", "simhash", "url").join(
-            F.broadcast(batch_keys),
-            F.col("norm_domain").eqNullSafe(F.col("_gd"))
-            & F.col("simhash").eqNullSafe(F.col("_gs")),
-        )
-        .select("norm_domain", "simhash", "url")
-    )
-    return exact_match_edges(touched)
 
 
 def _label_delta_driver(
@@ -319,88 +283,6 @@ def incremental_label_delta(
         "left_semi",
     )
     return changed.unionByName(fresh.select("url", "component")), iters
-
-
-def incremental_components(
-    prior_labels: DataFrame, new_edges: DataFrame
-) -> tuple[DataFrame, int]:
-    """Full label view for (prior ∪ new) edges: the incremental delta
-    applied over the prior labels by url replacement — equals a full CC
-    over the merged edge set (see incremental_label_delta)."""
-    delta, iters = incremental_label_delta(prior_labels, new_edges)
-    delta = persist_tracked(delta)  # consumed by the anti-join AND the union
-    view = prior_labels.join(delta.select("url"), "url", "left_anti").unionByName(delta)
-    return view, iters
-
-
-def incremental_candidate_pairs(
-    blocked_union: DataFrame,
-    new_flag: str = "_is_new",
-    max_block_size: int = DEFAULT_MAX_BLOCK_SIZE,
-    max_band_hamming: int = DEFAULT_MAX_BAND_HAMMING,
-) -> tuple[DataFrame, DataFrame]:
-    """New-touching candidate pairs: (new × all) minus old-old.
-
-    Same contract as ``blocking.candidate_pairs`` — slim uid join,
-    Hamming prefilter on simhash-band pairs, cross-key dedup, payload
-    attach, url_a < url_b — but the left join side carries only the new
-    batch, so the join output is O(batch × block), not O(block²). The
-    hot-key cap is measured over UNION block sizes (what a full
-    recompute would see).
-    """
-    sel = blocked_union.select(
-        F.xxhash64(F.col("url")).alias("uid"),
-        F.col("simhash"),
-        F.col(new_flag).alias("_new"),
-        F.explode("block_keys").alias("block_key"),
-    )
-    # Cap decisions only matter for keys the BATCH touches — an untouched
-    # key generates no new pairs — so the frequency scan is cut to the
-    # batch's key set with a broadcast semi-join BEFORE the groupBy:
-    # aggregating every history key to cap an O(batch) key set is an
-    # O(history) shuffle per fold that a 100-TB deployment can't pay.
-    # Block sizes are still counted over the full UNION membership of the
-    # surviving keys, so the cap mirrors the full recompute's decisions.
-    batch_keys = sel.filter(F.col("_new")).select("block_key").dropDuplicates()
-    # persisted: three consumers re-derive this lineage otherwise — the
-    # hot-keys agg and BOTH sides of the a×b self-join each re-scan the
-    # blocked view and re-run the explode + semi-join (forced-count
-    # attribution at 100k/16: candidate_pairs derivation 2.2 s without
-    # the persist, 0.9 s with; at 10^12 docs each re-derivation is a
-    # full column-pruned history scan). Slim columns only (uid,
-    # simhash, flag, key), MEMORY_AND_DISK.
-    touched = persist_tracked(
-        sel.join(F.broadcast(batch_keys), "block_key", "left_semi")
-    )
-    # persisted for the same reason as blocking.candidate_pairs: consumed
-    # by the broadcast exclusion AND the caller's overflow-metric action
-    hot = persist_tracked(hot_keys(touched.select("block_key", "uid"), max_block_size))
-    # both join sides draw from `touched`: untouched-key rows would die in
-    # the equi-join anyway, so never let them into a shuffle
-    cold = touched.join(F.broadcast(hot.select("block_key")), "block_key", "left_anti")
-
-    a = cold.filter(F.col("_new")).select(
-        "block_key", F.col("uid").alias("uid_a"), F.col("simhash").alias("_sh_a")
-    )
-    b = cold.select("block_key", F.col("uid").alias("uid_b"), F.col("simhash").alias("_sh_b"))
-    ham_ok = (~F.col("block_key").startswith("sh")) | (
-        F.bit_count(F.col("_sh_a").bitwiseXOR(F.col("_sh_b"))) <= max_band_hamming
-    )
-    # orient by least/greatest (the asymmetric join yields new-old pairs
-    # in one order and new-new pairs in both); cross-key dedup happens in
-    # the attach groupBy — one shuffle for dedup AND attach
-    slim = (
-        a.join(b, "block_key")
-        .filter(F.col("uid_a") != F.col("uid_b"))
-        .filter(ham_ok)
-        .select(
-            F.least("uid_a", "uid_b").alias("uid_a"),
-            F.greatest("uid_a", "uid_b").alias("uid_b"),
-        )
-    )
-    # cross-key dedup and payload attach: one O(history) scan and one
-    # O(pairs) shuffle (blocking._attach_payload)
-    return _attach_payload(blocked_union, slim), hot
 
 
 class FoldCommit(NamedTuple):
@@ -628,13 +510,14 @@ def fold_incremental(
                 kept.withColumn("_is_new", F.col("_batch_status") != F.lit("refresh"))
             )
         )
-        # persisted: exact_inc feeds BOTH the route_unmatched anti-join
-        # and the edge union inside one action — Spark does not share
-        # common subtrees across DAG branches, so without the persist the
-        # O(history) touched-group scan (groupBy + join-back over the
-        # full blocked union) runs twice.
-        exact_inc = persist_tracked(exact_match_edges_touched(blocked))
-        pairs, overflow = incremental_candidate_pairs(
+        # The _is_new flag makes both edge functions cut their work to
+        # what the batch touches (blocking.exact_match_edges /
+        # candidate_pairs). Persisted: exact_inc feeds BOTH the
+        # route_unmatched anti-join and the edge union inside one action —
+        # Spark does not share common subtrees across DAG branches, so
+        # without the persist the touched-group scan runs twice.
+        exact_inc = persist_tracked(exact_match_edges(blocked))
+        pairs, overflow = candidate_pairs(
             blocked,
             max_block_size=cfg.max_block_size,
             max_band_hamming=cfg.max_band_hamming,
@@ -642,8 +525,7 @@ def fold_incremental(
         # overflow rows exist only while this stage computes, so they are
         # written now, before the commit: a crash after the commit resumes
         # past this stage with them already on disk. The frame is persisted
-        # (hot_keys via incremental_candidate_pairs), so the pair plan
-        # below reuses it.
+        # (candidate_pairs' hot keys), so the pair plan below reuses it.
         io.write_metrics(
             batch_id,
             "edges",

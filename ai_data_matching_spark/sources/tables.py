@@ -440,6 +440,19 @@ class TableIO:
             if fp is None:
                 return n
 
+    def chain_head(self) -> dict | None:
+        """The newest ``labels``/``labels_delta`` record (the last stage a
+        run commits: the most recent complete state), or None.
+
+        Compaction records (``compacted_from``) are skipped: gc appends
+        them last for an OLDER fingerprint, and a head moved there would
+        let gc expire, and a restarted stream orphan, every newer fold. A
+        fold that compacts its own head keeps its labels_delta record."""
+        for rec in reversed(self._read_manifest()):
+            if rec["stage"] in ("labels", "labels_delta") and rec.get("compacted_from") is None:
+                return rec
+        return None
+
     def read_state(
         self, spark: SparkSession, stage: str, fingerprint: str
     ) -> DataFrame | None:
@@ -605,8 +618,8 @@ class TableIO:
         spark: SparkSession | None = None,
     ) -> dict:
         """Expire old snapshots: keep the last ``keep_last`` fingerprints
-        (by first-commit order) plus the chain head (the fingerprint of
-        the newest ``labels`` record — what a restarted stream chains on).
+        (by first-commit order) plus the chain head (``chain_head`` —
+        what a restarted stream chains on).
 
         Without retention a continuous-ER deployment grows storage without
         bound: every epoch commits blocked/edges/labels snapshots forever.
@@ -638,23 +651,8 @@ class TableIO:
         for rec in records:
             if rec["fingerprint"] not in fps:
                 fps.append(rec["fingerprint"])
-        # Chain head = the newest ORIGINAL labels commit. Compaction
-        # rewrites (compact_state full records, tagged compacted_from)
-        # are appended at gc time for OLDER fingerprints (a compacting
-        # fold's own labels_delta record still marks its fingerprint) —
-        # taking the last labels record by position would hand the head
-        # to the boundary fingerprint a previous gc compacted, and a
-        # keep_last window anchored there would expire the true head's
-        # newer folds.
-        head = next(
-            (
-                r["fingerprint"]
-                for r in reversed(records)
-                if r["stage"] in ("labels", "labels_delta")
-                and r.get("compacted_from") is None
-            ),
-            None,
-        )
+        head_rec = self.chain_head()
+        head = None if head_rec is None else head_rec["fingerprint"]
         keep = set(fps[-keep_last:]) if keep_last > 0 else set()
         if head is not None:
             keep.add(head)

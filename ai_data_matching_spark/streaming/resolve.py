@@ -53,29 +53,19 @@ def latest_state_fingerprint(io: TableIO, expect_cfg_fp: str | None = None) -> s
     ``cfg_fp`` (tables.commit extra); a head record whose ``cfg_fp``
     differs from it, or is missing, raises.
     """
-    # incremental folds commit the labels stage as a DELTA snapshot
-    # (merge-on-read chain); either record form marks a complete state.
-    # Compaction rewrites (TableIO.compact_state, tagged compacted_from)
-    # are skipped. gc appends them last for an OLDER boundary
-    # fingerprint, and a restarted stream chaining onto one would
-    # silently orphan every fold committed after it (the drop files are
-    # already checkpointed and never re-delivered). A fold that compacts
-    # its own head leaves its labels_delta record, which still marks it.
-    for rec in reversed(io._read_manifest()):
-        if rec["stage"] in ("labels", "labels_delta") and (
-            rec.get("compacted_from") is None
-        ):
-            rec_cfg = rec.get("cfg_fp")
-            if expect_cfg_fp is not None and rec_cfg != expect_cfg_fp:
-                raise ValueError(
-                    f"committed state {rec['fingerprint']} was resolved under "
-                    f"config {rec_cfg}, but the stream is configured with "
-                    f"{expect_cfg_fp}; refusing to chain incompatible configs. "
-                    "Re-run the base pipeline under the new config (fresh "
-                    "state) or restart the stream with the original config."
-                )
-            return rec["fingerprint"]
-    return None
+    rec = io.chain_head()
+    if rec is None:
+        return None
+    rec_cfg = rec.get("cfg_fp")
+    if expect_cfg_fp is not None and rec_cfg != expect_cfg_fp:
+        raise ValueError(
+            f"committed state {rec['fingerprint']} was resolved under "
+            f"config {rec_cfg}, but the stream is configured with "
+            f"{expect_cfg_fp}; refusing to chain incompatible configs. "
+            "Re-run the base pipeline under the new config (fresh "
+            "state) or restart the stream with the original config."
+        )
+    return rec["fingerprint"]
 
 
 def resolve_stream(

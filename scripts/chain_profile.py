@@ -11,8 +11,9 @@ the series is flat with a bump on the compaction fold (it pays the
 full-state write) and a dip right after (chain length 1).
 
 This script measures exactly that: a base run, then K same-sized folds
-chained on one snapshot root, printing per-fold seconds + the chain
-length each fold read. Diagnostic only — never part of the recorded
+chained on one snapshot root, printing per fold its seconds, its Spark
+job count (one job group around the fold) and the edge chain length the
+next fold reads. Diagnostic only — never part of the recorded
 bench artifact; per-phase fold spans come from
 ``perfbench/run.py --workload stream --trace 1``.
 
@@ -98,40 +99,40 @@ def _profile(spark, io, root: str, warm_root: str) -> None:
     release_persisted()
     print(f"base: {N_PAGES} docs in {base_s:.2f}s", flush=True)
 
+    sc = spark.sparkContext
     rows = []
     fp = None
     for k in range(1, N_FOLDS + 1):
         batch = generate_pages(spark, batch_n, seed=100 + k).drop("entity_id")
         batch.write.mode("overwrite").parquet(f"{root}/b{k}-src")
         batch = spark.read.parquet(f"{root}/b{k}-src")
+        group = f"chain-fold-{k}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
         t0 = time.perf_counter()
-        res = run_incremental(
-            spark,
-            batch,
-            io,
-            batch_id=f"b{k}",
-            prior_fingerprint=fp,
-        )
-        res.assigned.count()  # materialize the public view, like the bench
+        try:
+            res = run_incremental(
+                spark,
+                batch,
+                io,
+                batch_id=f"b{k}",
+                prior_fingerprint=fp,
+            )
+            res.assigned.count()  # materialize the public view, like the bench
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         fold_s = time.perf_counter() - t0
         release_persisted()
         fp = res.fingerprint
-        # chain length the NEXT fold will read: edge deltas committed
-        # AFTER the most recent full edges snapshot
-        chain = 0
-        for r in io._read_manifest():
-            if r.get("stage") == "edges":
-                chain = 0
-            elif r.get("stage") == "edges_delta":
-                chain += 1
-        compacted = k % COMPACT_EVERY == 0
         rows.append(
             {
                 "fold": k,
                 "batch_docs": batch_n,
                 "seconds": round(fold_s, 2),
-                "compaction_fold": compacted,
-                "edge_deltas_committed": chain,
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+                # a compacting fold leaves full snapshots at its own head
+                "compaction_fold": io.chain_length("labels", fp) == 0,
+                # the edge chain the NEXT fold reads
+                "edge_deltas_committed": io.chain_length("edges", fp),
             }
         )
         print(json.dumps(rows[-1]), flush=True)

@@ -52,15 +52,19 @@ def test_exact_match_edges_star_shape(spark):
     assert e["score"] == 1.0 and e["match_type"] == "exact"
 
 
-def test_candidate_pairs_and_hot_key_exclusion(spark):
-    # one hot domain with 30 unrelated pages + one small domain pair
+def _hub_blocked(spark):
+    """One hot domain with 30 unrelated pages + one small domain pair."""
     hot = [(f"http://hub.com/{i}", f"unique text number {i} padding words", "en") for i in range(30)]
     cold = [
         ("http://c.com/1", "shared cold text one two three", "en"),
         ("http://c.com/2", "shared cold text one two four", "en"),
     ]
     df = spark.createDataFrame(hot + cold, "url string, norm_text string, lang string")
-    blocked = _keyed(df)
+    return _keyed(df)
+
+
+def test_candidate_pairs_and_hot_key_exclusion(spark):
+    blocked = _hub_blocked(spark)
     pairs, overflow = candidate_pairs(blocked, max_block_size=10)
     ov = {r["block_key"] for r in overflow.collect()}
     assert "dom:hub.com" in ov
@@ -91,6 +95,73 @@ def test_band_pairs_hamming_filtered(spark):
     # no pairing of unrelated cross-domain pages
     assert ("http://x1.com/p", "http://y.com/b") not in got
     assert ("http://x1.com/p", "http://y.com/a") not in got
+
+
+def _broadcast_semi_joins(df) -> int:
+    """Broadcast left-semi joins in ``df``'s physical plan, cached
+    sub-plans included."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum("BroadcastHashJoin" in ln and "LeftSemi" in ln for ln in plan.splitlines())
+
+
+def _check_flag_contract(blocked, max_block_size):
+    """``_is_new`` over a third of the rows: the flagged input yields
+    exactly the base output that touches a new row, and only the flagged
+    input pays for the broadcast cut to the batch."""
+    flagged = blocked.withColumn("_is_new", F.pmod(F.xxhash64("url"), F.lit(3)) == 0)
+    new_urls = [r["url"] for r in flagged.filter("_is_new").select("url").collect()]
+    new_keys = {
+        r["k"]
+        for r in flagged.filter("_is_new").select(F.explode("block_keys").alias("k")).collect()
+    }
+    assert 0 < len(new_urls) < blocked.count()
+
+    base_pairs, base_hot = candidate_pairs(blocked, max_block_size=max_block_size)
+    pairs, hot = candidate_pairs(flagged, max_block_size=max_block_size)
+    touching = base_pairs.filter(F.col("url_a").isin(new_urls) | F.col("url_b").isin(new_urls))
+    assert touching.count() > 0
+    assert pairs.exceptAll(touching).count() == 0
+    assert touching.exceptAll(pairs).count() == 0
+    base_ov = {(r["block_key"], r["block_size"]) for r in base_hot.collect()}
+    assert {(r["block_key"], r["block_size"]) for r in hot.collect()} == {
+        (k, n) for k, n in base_ov if k in new_keys
+    }
+
+    base_exact = exact_match_edges(blocked)
+    exact = exact_match_edges(flagged)
+    base_rows = base_exact.collect()
+    groups: dict[str, set] = {}
+    for r in base_rows:
+        groups.setdefault(r["dst"], {r["dst"]}).add(r["src"])
+    touched_reps = {rep for rep, members in groups.items() if members & set(new_urls)}
+    want = {tuple(r) for r in base_rows if r["dst"] in touched_reps}
+    assert {tuple(r) for r in exact.collect()} == want
+
+    # the O(batch) cut: present for flagged input, absent for base input
+    assert _broadcast_semi_joins(hot) > 0
+    assert _broadcast_semi_joins(exact) > 0
+    assert _broadcast_semi_joins(base_hot) == 0
+    assert _broadcast_semi_joins(base_exact) == 0
+    return base_ov, want
+
+
+def test_flagged_input_yields_the_batch_touching_output(spark, pages_small):
+    """The fold hands candidate_pairs / exact_match_edges a union of old
+    and new rows flagged by ``_is_new``: pairs with a new endpoint, the
+    overflow of keys holding a new row, and the exact edges of groups
+    with a new member — each equal to the base output restricted to
+    them — on the hot-domain fixture and the shared synthetic corpus."""
+    from ai_data_matching_spark.cache import release_persisted
+    from ai_data_matching_spark.operators.blocking import latest_crawl_wins
+
+    try:
+        hub_ov, _ = _check_flag_contract(_hub_blocked(spark), max_block_size=10)
+        assert "dom:hub.com" in {k for k, _ in hub_ov}
+        corpus = latest_crawl_wins(with_extract_sketch_keys(pages_small.drop("entity_id")))
+        _, exact = _check_flag_contract(corpus, max_block_size=10)
+        assert exact
+    finally:
+        release_persisted()
 
 
 def test_salted_join_round_trips(spark):

@@ -26,14 +26,23 @@ def _split(pages, n_buckets: int, bucket: int):
     return pages.filter(F.pmod(F.xxhash64("url"), F.lit(n_buckets)) == bucket)
 
 
-def test_incremental_components_matches_full_cc(spark):
+def _apply_label_delta(prior_labels, new_edges):
+    """Full label view for prior ∪ new edges: the incremental label delta
+    applied over the prior labels by url replacement (the read_state
+    merge)."""
+    from ai_data_matching_spark.operators.incremental import incremental_label_delta
+
+    delta, _ = incremental_label_delta(prior_labels, new_edges)
+    return prior_labels.join(delta.select("url"), "url", "left_anti").unionByName(delta)
+
+
+def test_incremental_label_delta_matches_full_cc(spark):
     """The contracted incremental CC must equal a full CC over
     prior ∪ new edges — pinned on the risky shapes: a new node BRIDGING
     two prior components, a new node that becomes the merged component's
     min-url rep, and an intra-component delta edge (contracted
     self-loop)."""
     from ai_data_matching_spark.operators.clustering import connected_components
-    from ai_data_matching_spark.operators.incremental import incremental_components
 
     prior_edges = spark.createDataFrame(
         [("a1", "a2"), ("b1", "b2"), ("c1", "c2")], "src string, dst string"
@@ -48,7 +57,7 @@ def test_incremental_components_matches_full_cc(spark):
         ],
         "src string, dst string",
     )
-    inc_labels, _ = incremental_components(prior_labels, new_edges)
+    inc_labels = _apply_label_delta(prior_labels, new_edges)
     full_labels, _ = connected_components(prior_edges.unionByName(new_edges))
     as_map = lambda df: {  # noqa: E731
         r["url"]: r["component"] for r in df.collect()
@@ -740,8 +749,8 @@ def test_compaction_retry_completes_after_interleaved_gc(
 
 def test_incremental_cc_equals_full_cc_on_random_fold_sequences(spark):
     """Property check behind the hand-picked shapes above: for random
-    edge-batch sequences, folding batch-by-batch through
-    incremental_components must reproduce the full CC over the
+    edge-batch sequences, folding batch-by-batch through the label delta
+    applied over the prior must reproduce the full CC over the
     cumulative edge union AFTER EVERY FOLD — bridges, rep takeovers and
     self-loops arise here by chance rather than by construction, and a
     contraction bug that survives the directed cases (e.g. a rep-chain
@@ -749,7 +758,6 @@ def test_incremental_cc_equals_full_cc_on_random_fold_sequences(spark):
     import random
 
     from ai_data_matching_spark.operators.clustering import connected_components
-    from ai_data_matching_spark.operators.incremental import incremental_components
 
     # mixed lexicographic ranges so merged-component reps regularly move
     # to a node introduced in a LATER fold (digit-prefixed sorts lowest)
@@ -765,7 +773,7 @@ def test_incremental_cc_equals_full_cc_on_random_fold_sequences(spark):
         prior, _ = connected_components(mk(batches[0]))
         seen = batches[0]
         for batch in batches[1:]:
-            prior, _ = incremental_components(prior, mk(batch))
+            prior = _apply_label_delta(prior, mk(batch))
             seen = seen + batch
             full, _ = connected_components(mk(seen))
             assert as_map(prior) == as_map(full), f"seed={seed}"
